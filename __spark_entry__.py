@@ -949,15 +949,20 @@ def _gate_workdir_housekeeping(workdir: str) -> None:
             if p == workdir:
                 continue
             pid_part = name[len("nospa_gate_atrest_"):].split("_", 1)[0]
+            owner_alive = None  # no pid in the name: legacy hash-only format
             if pid_part.isdigit():
                 try:
                     os.kill(int(pid_part), 0)
-                    continue  # owner alive: never sweep, regardless of age
+                    owner_alive = True
                 except ProcessLookupError:
-                    pass  # owner dead: sweep below
+                    owner_alive = False
                 except PermissionError:
-                    continue  # alive under another uid
-            elif _time.time() - os.path.getmtime(p) <= 86400:
+                    owner_alive = True  # alive under another uid
+                except OverflowError:
+                    pass  # all-digit legacy hash too large to be a pid
+            if owner_alive:
+                continue  # never sweep a live owner's dir, regardless of age
+            if owner_alive is None and _time.time() - os.path.getmtime(p) <= 86400:
                 continue  # legacy hash-only name: keep the age rule
             shutil.rmtree(p, ignore_errors=True)
     except OSError:

@@ -72,16 +72,17 @@ def extract_mentions(transcripts: DataFrame, extra_cols: list[str] | None = None
     # all fail, and the groups are pure slices around that first
     # occurrence. `.` excludes newlines; a newline in either group at the
     # first split can never be avoided by a later split (mid itself
-    # contains no newline), so the newline check below is exact too. The
-    # equivalence is pinned adversarially by
+    # contains no newline), so the newline check below is exact too. `$`
+    # also matches before ONE final newline, so exactly one trailing "\n"
+    # is stripped first. The equivalence is pinned adversarially by
     # tests/test_operators.py::test_extract_mentions_matches_regex_kernel.
-    seg_parts = [t.split("{}") for t, _ in E.TEMPLATES]
+    templates = [(t.split("{}"), rel) for t, rel in E.TEMPLATES]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf["text"].astype("string")
+            texts = pdf["text"].astype("string").str.removesuffix("\n")
             outs = []
-            for (prefix, mid, suffix), (_, rel) in zip(seg_parts, E.TEMPLATES):
+            for (prefix, mid, suffix), rel in templates:
                 # group 1 is lazy but non-empty, so the regex's split point
                 # is the first mid occurrence at index >= len(prefix)+1:
                 # search in the tail AFTER prefix plus one group-1 char

@@ -3,16 +3,24 @@
 The reference renders one section per IC — header, "Pass." or itemized
 violations — through a log4j appender into ``validation_result_<ts>.md``
 (nonsparql/NospaValidator.java:445-490, resources/log4j.xml:24-33). Here the
-markdown report collects a bounded sample per IC for humans, and the full
-violation tables land in parquet for programmatic P/R scoring — at 100 TB
-the parquet tables are the contract, the markdown is a preview.
+full violation tables land in parquet for programmatic P/R scoring — at
+100 TB the parquet tables are the contract, the markdown is a preview.
+
+Each IC plan runs exactly once, as its parquet write. The per-IC row count
+comes from the footers of the files just committed, and the markdown
+sample is read back from them in this process: a violations table is small
+next to the cube, and reading a few KB of parquet costs no Spark job.
 """
 
 from __future__ import annotations
 
 import datetime
+import glob
+import heapq
+import itertools
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 IC_TITLES = {
@@ -40,36 +48,70 @@ IC_TITLES = {
 }
 
 
+def _row_key(row: tuple) -> tuple:
+    """Spark's ascending sort order, nulls first, over the whole row: the
+    first column decides and the rest break ties, so the sample does not
+    depend on the part-file layout. Strings compare by code point, which
+    is UTF-8 byte order; array columns (lists of strings) element-wise."""
+    return tuple((v is not None, v) for v in row)
+
+
+def _read_committed(path: str, k: int) -> tuple[int, list[tuple]]:
+    """(row count, the ``k`` first rows in ``_row_key`` order) of a parquet
+    table committed at ``path`` on the local filesystem.
+
+    The count comes from the footers. The rows are a streaming top-k over
+    record batches, so memory holds ``k`` rows plus one batch, never
+    the whole table. A directory without ``_SUCCESS`` (for example a path
+    that Spark resolved against a remote default filesystem) raises rather
+    than reading as an empty table."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        raise FileNotFoundError(f"no committed parquet table at {path!r} on the local filesystem")
+    n = 0
+    top: list[tuple] = []
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        with pq.ParquetFile(f) as pf:
+            n += pf.metadata.num_rows
+            for batch in pf.iter_batches():
+                rows = zip(*(col.to_pylist() for col in batch.columns))
+                top = heapq.nsmallest(k, itertools.chain(top, rows), key=_row_key)
+    return n, top
+
+
 def write_validation_report(
     violations: dict[str, DataFrame],
+    parquet_dir: str,
     md_path: str | None = None,
-    parquet_dir: str | None = None,
     sample_rows: int = 50,
-) -> str:
-    """Render per-IC sections; persist full tables to parquet if requested.
+) -> tuple[str, dict[str, int]]:
+    """Write each IC's violations to ``<parquet_dir>/<ic>`` and render the
+    markdown report from the committed tables.
 
-    Returns the markdown text. Violation DataFrames are sorted by their
-    first column before sampling so reports are deterministic (the reference
+    Returns ``(markdown text, {ic: violation count})``. ``parquet_dir`` must
+    be on the local filesystem. Each section samples the first
+    ``sample_rows`` rows ordered by the first column, nulls first (ties
+    broken on the full row), so reports are deterministic (the reference
     emits hash order; SURVEY.md §2.6 documents the deliberate improvement).
     """
     ts = datetime.datetime.now().strftime("%Y%m%d%H%M%S")
     lines = [f"# Validation result ({ts})", ""]
+    counts: dict[str, int] = {}
     for name, df in violations.items():
+        out = os.path.join(parquet_dir, name)
+        df.write.mode("overwrite").parquet(out)
+        n, sample = _read_committed(out, sample_rows)
+        counts[name] = n
         title = IC_TITLES.get(name, name)
         lines += [f"## {title}", ""]
-        first_col = df.columns[0]
-        sample = df.orderBy(first_col).limit(sample_rows + 1).collect()
-        if parquet_dir is not None:
-            df.write.mode("overwrite").parquet(os.path.join(parquet_dir, name))
-        if not sample:
+        if n == 0:
             lines += ["Pass.", ""]
             continue
         header = "| " + " | ".join(df.columns) + " |"
         sep = "|" + "---|" * len(df.columns)
         lines += [header, sep]
-        for row in sample[:sample_rows]:
+        for row in sample:
             lines.append("| " + " | ".join(str(v) for v in row) + " |")
-        if len(sample) > sample_rows:
+        if n > sample_rows:
             lines.append(f"| ... truncated at {sample_rows} rows ... |")
         lines.append("")
     text = "\n".join(lines)
@@ -78,4 +120,4 @@ def write_validation_report(
             md_path = os.path.join(md_path, f"validation_result_{ts}.md")
         with open(md_path, "w", encoding="utf-8") as fh:
             fh.write(text)
-    return text
+    return text, counts

@@ -68,3 +68,25 @@ def test_ungated_tail_is_only_documented_duplicates():
     } | NO_ORACLE
     unexpected = [k for k in tail if k not in allowed]
     assert not unexpected, f"undocumented entries in the ungated tail: {unexpected}"
+
+
+def test_gate_sweep_treats_oversized_digit_suffix_as_legacy(tmp_path, monkeypatch):
+    """An all-digit gate-dir suffix too large to be a pid is a legacy
+    hash-only name: the sweep keeps it while young and removes it once
+    older than a day, instead of raising OverflowError from os.kill."""
+    import tempfile
+    import time
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    young = tmp_path / "nospa_gate_atrest_99999999999999999999"
+    old = tmp_path / "nospa_gate_atrest_88888888888888888888"
+    young.mkdir()
+    old.mkdir()
+    stale = time.time() - 2 * 86400
+    os.utime(old, (stale, stale))
+    own = tmp_path / f"nospa_gate_atrest_{os.getpid()}_self"
+    own.mkdir()
+    entry_mod._gate_workdir_housekeeping(str(own))
+    assert young.exists() and own.exists()
+    assert not old.exists()

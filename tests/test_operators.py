@@ -394,13 +394,14 @@ QUALIFY rank <= {k}
     assert len(got) == 5 * k
 
 
-def test_extract_mentions_matches_regex_kernel(spark):
+def test_extract_mentions_matches_regex_kernel(spark, monkeypatch):
     """The r6 vectorized split/slice extraction must agree with the
     anchored lazy-group regex each template compiles to, on adversarial
     texts: mid-segment at position 0 (the regex backtracks past it),
     repeated mid segments, empty would-be groups, missing suffixes,
-    newlines inside groups (the regex's `.` excludes them), and plain
-    hits for every template."""
+    newlines inside groups (the regex's `.` excludes them), one or two
+    trailing newlines (`$` matches before one final newline only), a
+    template with no suffix, and plain hits for every template."""
     import re
 
     import pandas as pd
@@ -411,6 +412,7 @@ def test_extract_mentions_matches_regex_kernel(spark):
         extract_mentions,
     )
 
+    monkeypatch.setattr(E, "TEMPLATES", E.TEMPLATES + [("{} mentions {}", "mentions")])
     mid0 = " works with "
     suf0 = " on the pipeline."
     texts = [
@@ -432,6 +434,13 @@ def test_extract_mentions_matches_regex_kernel(spark):
         "",
         suf0,
         "A works with B on the pipeline. works with C on the pipeline.",
+        "A works with B on the pipeline.\n",
+        "A works with B on the pipeline.\n\n",
+        "A works with B\non the pipeline.\n",
+        "A mentions B",
+        "A mentions B\n",
+        "A mentions B\n\n",
+        "A mentions B\nC",
     ]
     pats = [(re.compile(p), rel) for p, rel in _template_patterns()]
     expected = set()

@@ -137,7 +137,7 @@ def test_validation_report(spark, tmp_path):
 
     ok = spark.createDataFrame([], "obs string")
     bad = spark.createDataFrame([("a", 2)], "obs string, n_datasets long")
-    text = write_validation_report(
+    text, counts = write_validation_report(
         {"ic1": bad, "ic2": ok}, md_path=str(tmp_path), parquet_dir=str(tmp_path / "v")
     )
     assert "Integrity Constraint 1" in text and "| a | 2 |" in text
@@ -146,6 +146,73 @@ def test_validation_report(spark, tmp_path):
     import glob
 
     assert glob.glob(str(tmp_path / "validation_result_*.md"))
+
+
+def test_validation_report_reads_back_committed_tables(spark, tmp_path):
+    """The markdown sample and the counts come from the parquet just
+    written: a multi-partition table longer than the sample is truncated
+    to its first rows by the first column, nulls first, ties broken on the
+    full row (so the partition layout cannot change it), and each count
+    equals the rows in the committed files; an empty IC reads "Pass." and
+    is still committed."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from nospa_rdf_data_cube_validator_spark.report import write_validation_report
+
+    rows = [(None if i % 7 == 0 else f"o{i % 5}", f"d{i % 3}", i) for i in range(40)]
+    schema = "obs string, dim string, n long"
+    empty = spark.createDataFrame([], "obs string")
+
+    def section(layout):
+        bad = spark.createDataFrame(rows, schema).repartition(layout, "n")
+        text, counts = write_validation_report(
+            {"ic11": bad, "ic2": empty}, parquet_dir=str(tmp_path / f"v{layout}"), sample_rows=8
+        )
+        return text.split("\n", 1)[1], counts  # drop the timestamped title
+
+    text, counts = section(3)
+    assert text == section(1)[0]
+    assert counts == {"ic11": 40, "ic2": 0}
+    on_disk = {
+        ic: sum(pq.read_metadata(f).num_rows for f in glob.glob(str(tmp_path / "v3" / ic / "*.parquet")))
+        for ic in counts
+    }
+    assert on_disk == counts
+    assert all(os.path.exists(tmp_path / "v3" / ic / "_SUCCESS") for ic in counts)
+
+    want = sorted(rows, key=lambda r: [(v is not None, v) for v in r])[:8]
+    body = text.split("## Integrity Constraint 2", 1)[0]
+    table = [ln for ln in body.splitlines() if ln.startswith("| ")]
+    assert table[0] == "| obs | dim | n |"
+    assert table[1:9] == ["| " + " | ".join(str(v) for v in r) + " |" for r in want]
+    assert table[1].startswith("| None |") and table[8].startswith("| o0 |")
+    assert table[9] == "| ... truncated at 8 rows ... |" and len(table) == 10
+    assert text.split("## Integrity Constraint 2: Unique DSD", 1)[1].strip() == "Pass."
+
+
+def test_cli_validate_exit_code(spark, tmp_path):
+    """`main.py validate` exits 2 when any IC fails and 0 when all pass:
+    the golden cube flags IC-4 (sdmx-dimension:sex has no rdfs:range);
+    declaring the range makes it clean."""
+    import argparse
+
+    import main as cli
+    from nospa_rdf_data_cube_validator_spark import terms
+    from nospa_rdf_data_cube_validator_spark.sources.rdf import write_ntriples
+
+    from . import fixtures as fx
+
+    def validate(name, rows):
+        cube = str(tmp_path / f"{name}.nt")
+        write_ntriples(terms.triples_df(spark, rows), cube)
+        args = argparse.Namespace(input=cube, report=str(tmp_path / name), strict=False)
+        return cli.cmd_validate(spark, args)
+
+    assert validate("golden", fx.golden_rows()) == 2
+    sex_range = terms.iri_row(fx.SEX, fx.RDFS + "range", fx.SDMX_CODE + "Sex")
+    assert validate("clean", fx.golden_rows() + [sex_range]) == 0
 
 
 def test_ntriples_roundtrip_control_chars(spark, tmp_path):
