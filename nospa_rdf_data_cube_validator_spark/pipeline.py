@@ -8,16 +8,23 @@ Stages are checkpoint-resumable: each stage materializes to a parquet
 snapshot under the work dir (an Iceberg snapshot stand-in — this sandbox
 ships no Iceberg jars, the layout/manifest semantics are the same) and a
 JSON manifest records completion; a killed run restarts from the last
-completed snapshot. Every stage also writes per-partition lineage rows
-(stage, partition_id, row_count) for the north_rule's lineage requirement.
+completed snapshot. Committing a stage costs one Spark action, the parquet
+write: its row count and its per-partition lineage rows (stage,
+partition_id, row_count; the north_rule's lineage requirement) are read on
+the driver from the footers of the committed part files.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,12 +84,16 @@ def edges_to_graph(spark: SparkSession, canonical: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("obj_lang"),
     ).dropDuplicates()
 
+    # url_encode escapes "/", so the "/"-joined key parts cannot run into
+    # each other: the IRI is injective in (conv_id, turn_idx, rel)
     obs = canonical.select(
-        F.concat(F.lit(OBS_NS), F.col("conv_id"), F.lit("-t"), F.col("turn_idx"), F.lit("-"), F.col("rel")).alias("obs"),
+        F.concat(
+            F.lit(OBS_NS), F.url_encode("conv_id"), F.lit("/"), F.col("turn_idx"), F.lit("/"), F.url_encode("rel")
+        ).alias("obs"),
         F.concat(F.lit(CONV_NS), F.col("conv_id")).alias("conv"),
         F.col("turn_idx").cast("string").alias("turn"),
         F.concat(F.lit(E.PRED_NS), F.col("rel")).alias("relation"),
-    ).dropDuplicates()  # obs determines (conv, turn, relation) by construction
+    ).dropDuplicates()  # obs determines (conv, turn, relation)
 
     def t_struct(pred: str, obj_col, kind: str, dt: str | None = None) -> F.Column:
         return F.struct(
@@ -146,6 +157,24 @@ def edges_to_graph(spark: SparkSession, canonical: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # checkpoint-resumable runner
 # ---------------------------------------------------------------------------
+_PART_ID = re.compile(r"part-(\d+)")
+
+
+def committed_part_rows(path: str) -> dict[int, int]:
+    """Rows per writer partition of the parquet table Spark committed at
+    ``path`` on the local filesystem, from the part-file footers (no Spark
+    job). The partition id is the ``part-NNNNN`` prefix Spark gives each
+    task's files. A directory without ``_SUCCESS`` raises rather than
+    reading as an empty table."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        raise FileNotFoundError(f"no committed parquet table at {path!r} on the local filesystem")
+    per_part: dict[int, int] = {}
+    for f in glob.glob(os.path.join(path, "part-*.parquet")):
+        pid = int(_PART_ID.match(os.path.basename(f)).group(1))
+        per_part[pid] = per_part.get(pid, 0) + pq.read_metadata(f).num_rows
+    return per_part
+
+
 class StageRunner:
     """Parquet-snapshot + manifest stage runner with per-partition lineage.
 
@@ -158,7 +187,15 @@ class StageRunner:
     (version, rows, seconds, ts) and :meth:`read_snapshot` time-travels to
     any retained version, mirroring Iceberg's snapshot log / ``VERSION AS
     OF`` reads. Pre-versioning layouts (data directly under ``<stage>/``)
-    are still read transparently."""
+    are still read transparently.
+
+    A stage commit launches one Spark action, the parquet write. The
+    manifest's ``rows`` and the ``_lineage_<stage>`` table come from the
+    footers of the committed part files, on the driver; the snapshot is
+    read back with the build frame's schema, so nothing is inferred. A
+    lineage row's ``partition_id`` is the partition that WROTE its rows
+    (the ``part-NNNNN`` prefix of the files), not a split of the read-back
+    frame. The work dir must be on the local filesystem."""
 
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
@@ -179,13 +216,26 @@ class StageRunner:
             json.dump(self.manifest, fh, indent=2)
         os.replace(tmp, self.manifest_path)
 
-    def _lineage(self, stage: str, df: DataFrame) -> None:
-        lineage = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("row_count"))
-            .withColumn("stage", F.lit(stage))
+    def _commit_lineage(self, stage: str, path: str) -> int:
+        """Write ``_lineage_<stage>`` (partition_id int, row_count bigint,
+        stage string) from the footers of the table committed at ``path``
+        and return its total row count. Partitions that wrote no rows get
+        no lineage row."""
+        per_part = {pid: n for pid, n in sorted(committed_part_rows(path).items()) if n}
+        lineage = pa.table(
+            {
+                "partition_id": pa.array(list(per_part), pa.int32()),
+                "row_count": pa.array(list(per_part.values()), pa.int64()),
+                "stage": pa.array([stage] * len(per_part), pa.string()),
+            }
         )
-        lineage.write.mode("overwrite").parquet(os.path.join(self.workdir, f"_lineage_{stage}"))
+        out = os.path.join(self.workdir, f"_lineage_{stage}")
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        # store_schema=False: no serialized Arrow schema in the footer, which
+        # would add ~350 B per lineage file
+        pq.write_table(lineage, os.path.join(out, "part-00000.parquet"), store_schema=False)
+        return sum(per_part.values())
 
     def _snapshot_path(self, stage: str, info: dict) -> str:
         # streamed stages (record_stream_stage) live wherever the stream
@@ -216,8 +266,6 @@ class StageRunner:
             # a version dir the manifest never committed = leftovers of a
             # killed write; safe to clear (the committed snapshot, if any,
             # lives in a LOWER version dir the pointer still references)
-            import shutil
-
             shutil.rmtree(path)
         t0 = time.time()
         df = build()
@@ -225,11 +273,10 @@ class StageRunner:
         # write succeeds, so a kill mid-write cannot corrupt the previous
         # snapshot (Iceberg's write-new-then-commit discipline)
         df.write.mode("errorifexists").parquet(path)
-        out = self.spark.read.parquet(path)
-        self._lineage(stage, out)
+        out = self.spark.read.schema(df.schema).parquet(path)
         entry = {
             "done": True,
-            "rows": out.count(),
+            "rows": self._commit_lineage(stage, path),
             "seconds": round(time.time() - t0, 3),
             "version": version,
         }
@@ -272,7 +319,6 @@ class StageRunner:
         catalog makes even the metadata durable; this path is the
         file-system-truth equivalent."""
         import hashlib
-        import shutil
 
         tbl = f"{stage}_{hashlib.md5(self.workdir.encode()).hexdigest()[:8]}"
         info = self.manifest["stages"].get(stage)
@@ -304,20 +350,19 @@ class StageRunner:
         warehouse = self.spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         shutil.rmtree(os.path.join(warehouse, tbl), ignore_errors=True)
         write_bucketed(df, tbl, buckets=buckets)
-        out = self.spark.table(tbl)
-        self._lineage(stage, out)
+        location = os.path.join(warehouse, tbl)
         self.manifest["stages"][stage] = {
             "done": True,
             "table": tbl,
-            "location": os.path.join(warehouse, tbl),
+            "location": location,
             "buckets": buckets,
             "bucket_cols": ["subj"],
             "sort_cols": ["subj", "pred"],
-            "rows": out.count(),
+            "rows": self._commit_lineage(stage, location),
             "seconds": round(time.time() - t0, 3),
         }
         self._save()
-        return out
+        return self.spark.table(tbl)
 
     def _register_bucketed(self, tbl: str, loc: str, info: dict) -> DataFrame | None:
         """Re-create the catalog entry for an at-rest bucketed table whose
@@ -327,6 +372,9 @@ class StageRunner:
         never be silently validated) — never raises, so a corrupted
         warehouse degrades to an honest rebuild."""
         try:
+            expected = info.get("rows")
+            if expected is not None and sum(committed_part_rows(loc).values()) != expected:
+                return None
             schema = self.spark.read.parquet(loc).schema
             ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
             bcols = ", ".join(f"`{c}`" for c in info.get("bucket_cols", ["subj"]))
@@ -337,12 +385,7 @@ class StageRunner:
                 f"INTO {info.get('buckets', 32)} BUCKETS "
                 f"LOCATION '{loc}'"
             )
-            out = self.spark.table(tbl)
-            expected = info.get("rows")
-            if expected is not None and out.count() != expected:
-                self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                return None
-            return out
+            return self.spark.table(tbl)
         except Exception:  # noqa: BLE001 — degrade to rebuild
             return None
 

@@ -8,6 +8,7 @@ Arrow on). Nothing here is sandbox-specific.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -90,6 +91,30 @@ def spread(df, min_partitions: int | None = None):
     return df if n >= target else df.repartition(target)
 
 
+#: bytes one ObjectHashAggregate key costs in a task's hash map: the key,
+#: its small collect_* buffer and the map's own overhead
+OHA_BYTES_PER_KEY = 256
+
+_SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def oha_fallback_threshold(driver_memory: str, master: str) -> int:
+    """Keys an ObjectHashAggregate task may hold before it falls back to
+    sort-based aggregation: the driver heap split over twice the local
+    task slots (the other half is left to everything else on the heap), at
+    ``OHA_BYTES_PER_KEY`` per key. All ``local[N]`` tasks share the one
+    driver heap. ``driver_memory`` is a Spark size string ("1g", "512m";
+    no unit means MiB); the task slots are N of ``local[N]`` or
+    ``local[N,F]``, 1 for ``local``, and the machine's cores otherwise."""
+    size = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_memory.strip().lower())
+    if size is None:
+        raise ValueError(f"unparseable spark.driver.memory {driver_memory!r}")
+    heap = int(size.group(1)) * _SIZE_UNITS[size.group(2) or "m"]
+    slots = re.fullmatch(r"local(?:\[(\d+)(?:,\d+)?\])?", master.strip())
+    cores = int(slots.group(1) or 1) if slots else os.cpu_count() or 1
+    return max(1, heap // (2 * cores * OHA_BYTES_PER_KEY))
+
+
 def get_spark(
     app_name: str = "nospa-cube-spark",
     master: str | None = None,
@@ -99,6 +124,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM", "8g")
     # The pre-importing worker daemon (worker_daemon.py) must be
     # importable by the Python the JVM spawns; the driver's sys.path
     # injection does not propagate, so export the package root on
@@ -153,15 +179,14 @@ def get_spark(
         # task's hash map holds more than this many KEYS. The default (128)
         # makes every observation-scale collect_* aggregation silently sort
         # its entire partition by long URI strings — measured as the
-        # dominant CPU in the ic11/12 base build. Per-task memory stays
-        # bounded by (keys x small set buffers); at 4M keys x ~200 B that
-        # is <1 GB per task, sized to this sandbox's 8g driver. Production
-        # clusters size it to executor memory / concurrent tasks — the env
-        # knob ships with the engine (guide §2.3: the fallback remains the
-        # OOM guard, it just should not fire at 128 keys).
+        # dominant CPU in the ic11/12 base build. The threshold is sized
+        # from the heap the concurrent tasks share (oha_fallback_threshold);
+        # SPARK_GRAFT_OHA_FALLBACK overrides it (guide §2.3: the fallback
+        # remains the OOM guard, it just should not fire at 128 keys).
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OHA_FALLBACK", str(4 * 1024 * 1024)),
+            os.environ.get("SPARK_GRAFT_OHA_FALLBACK")
+            or str(oha_fallback_threshold(driver_memory, master)),
         )
         # Allow shuffled-hash joins where the per-partition build side fits
         # (guide §3.1/§9): the validator's obs-keyed joins otherwise pay two
@@ -177,7 +202,7 @@ def get_spark(
             "spark.python.daemon.module",
             "nospa_rdf_data_cube_validator_spark.worker_daemon",
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -167,6 +167,10 @@ def test_pipeline_bucketed_encoded_atrest(spark, tmp_path):
     assert "Exchange" not in plan, plan
     manifest = json.load(open(os.path.join(wd, "_MANIFEST.json")))
     assert manifest["stages"]["cube_atrest"]["done"]
+    # run_table's lineage (from the table's part-file footers) totals its rows
+    lineage = spark.read.parquet(os.path.join(wd, "_lineage_cube_atrest"))
+    rows = manifest["stages"]["cube_atrest"]["rows"]
+    assert lineage.agg(F.sum("row_count")).collect()[0][0] == rows == store_df.count()
     # same-session resume: the manifest (incl. recorded seconds) is untouched
     before = open(os.path.join(wd, "_MANIFEST.json")).read()
     res2 = run_pipeline(spark, tr, wd, validate=True, encoded=True, bucketed=True, buckets=4)

@@ -912,6 +912,99 @@ def test_stage_runner_versioned_snapshots_time_travel(spark, tmp_path):
     assert runner.read_snapshot("nums", version=2).count() == 3
 
 
+def _commit_jobs(spark, group: str, action) -> int:
+    """Spark jobs ``action`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_commit_is_one_write(spark, tmp_path):
+    """Committing a stage launches exactly the jobs of a bare parquet write
+    of the same frame: the read-back schema, the lineage and the manifest
+    row count all come from the committed files without a Spark job."""
+    import uuid
+
+    df = spark.range(300).selectExpr("id", "cast(id % 7 as string) AS s").repartition(3)
+    runner = StageRunner(spark, str(tmp_path / "wd"))
+    tag = uuid.uuid4().hex
+    bare = _commit_jobs(spark, f"bare-{tag}", lambda: df.write.parquet(str(tmp_path / "bare")))
+    staged = _commit_jobs(spark, f"stage-{tag}", lambda: runner.run("nums", lambda: df))
+    assert bare > 0
+    assert staged == bare
+
+
+def test_stage_lineage_matches_part_file_footers(spark, tmp_path):
+    """``_lineage_<stage>`` holds one row per writing partition with the row
+    count of its ``part-NNNNN`` files; the lineage total is the manifest's
+    ``rows`` and the snapshot's count."""
+    import glob
+    import re
+
+    import pyarrow.parquet as pq
+
+    wd = str(tmp_path / "wd")
+    runner = StageRunner(spark, wd)
+    df = spark.range(500).selectExpr("id", "cast(id % 11 as string) AS s").repartition(4, "s")
+    out = runner.run("multi", lambda: df)
+    path = os.path.join(wd, "multi", "v1")
+    footers: dict[int, int] = {}
+    for f in glob.glob(os.path.join(path, "part-*.parquet")):
+        pid = int(re.match(r"part-(\d+)-", os.path.basename(f)).group(1))
+        footers[pid] = footers.get(pid, 0) + pq.read_metadata(f).num_rows
+    footers = {pid: n for pid, n in footers.items() if n}
+    assert len(footers) > 1
+    lineage = spark.read.parquet(os.path.join(wd, "_lineage_multi"))
+    assert lineage.schema.simpleString() == "struct<partition_id:int,row_count:bigint,stage:string>"
+    rows = lineage.collect()
+    assert {r["partition_id"]: r["row_count"] for r in rows} == footers
+    assert {r["stage"] for r in rows} == {"multi"}
+    total = sum(footers.values())
+    assert total == runner.manifest["stages"]["multi"]["rows"] == out.count() == 500
+    assert spark.read.parquet(path).count() == total
+    assert out.schema == spark.read.parquet(path).schema
+
+
+def test_empty_stage_commits_empty_lineage(spark, tmp_path):
+    """An empty build commits rows == 0 and a readable, empty lineage table
+    with the lineage schema."""
+    wd = str(tmp_path / "wd")
+    runner = StageRunner(spark, wd)
+    out = runner.run("empty", lambda: spark.createDataFrame([], "x int, y string"))
+    assert out.count() == 0
+    assert out.columns == ["x", "y"]
+    assert runner.manifest["stages"]["empty"]["rows"] == 0
+    lineage = spark.read.parquet(os.path.join(wd, "_lineage_empty"))
+    assert lineage.count() == 0
+    assert lineage.schema.simpleString() == "struct<partition_id:int,row_count:bigint,stage:string>"
+
+
+def test_observation_iri_is_injective(spark):
+    """Two canonical rows that a plain conv + "-t" + turn + "-" + rel concat
+    maps to the same observation IRI stay two observations, each with
+    exactly one conversation dimension."""
+    from nospa_rdf_data_cube_validator_spark.pipeline import DIM_CONV, edges_to_graph
+
+    canonical = spark.createDataFrame(
+        [
+            ("c", 1, "a-t2-b", "x", "y", E.entity_iri("alice"), E.entity_iri("cardiff")),
+            ("c-t1-a", 2, "b", "x", "y", E.entity_iri("alice"), E.entity_iri("cardiff")),
+        ],
+        "conv_id string, turn_idx int, rel string, subj_surface string, obj_surface string,"
+        " subj_entity string, obj_entity string",
+    )
+    graph = edges_to_graph(spark, canonical)
+    obs = graph.where((F.col("pred") == qb.RDF_TYPE) & (F.col("obj") == qb.QB_OBSERVATION))
+    assert obs.select("subj").distinct().count() == 2
+    conv_dims = graph.where(F.col("pred") == DIM_CONV).groupBy("subj").count().collect()
+    assert sorted(r["count"] for r in conv_dims) == [1, 1]
+
+
 def test_run_table_survives_new_session(tmp_path):
     """The at-rest bucketed table must survive a session restart: process 1
     builds it via run_table, process 2 (a genuinely fresh JVM + in-memory
