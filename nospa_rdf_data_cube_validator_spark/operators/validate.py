@@ -130,9 +130,11 @@ class CubeValidator:
             return df
         from ..session import local_frame
 
-        # LocalRelation, not a Python-RDD plan: broadcasts of these frames
-        # then build driver-side with no job (guide §4.1) — the previous
-        # form paid a 32-task Python-worker round trip per consumption.
+        # LocalRelation, not a Python-RDD plan, for any row count: broadcasts
+        # of these frames build driver-side with no job, and an EMPTY one (a
+        # cube without qb:measureType, qb:codeList or hierarchies) lets the
+        # optimizer fold the ICs joined to it (ic15/16/19/20/21) into an
+        # empty LocalRelation before any job runs.
         return local_frame(df.sparkSession, rows, df.schema)
 
     def _persist(self, df: DataFrame) -> DataFrame:

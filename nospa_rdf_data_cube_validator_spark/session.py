@@ -10,41 +10,45 @@ from __future__ import annotations
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 
 def local_frame(spark: SparkSession, rows, schema):
-    """Driver-side rows -> a TRUE LocalRelation DataFrame.
+    """Driver-side rows -> a DataFrame whose plan never calls back into Python.
 
     ``spark.createDataFrame(list_of_rows)`` builds a *Python RDD* plan
     (``applySchemaToPythonRDD``): every evaluation — including each
-    BroadcastExchange that consumes it — launches a full task set whose
-    tasks round-trip through Python workers to unpickle the rows
-    (~200 ms/task measured on metadata-scale frames). Routing the same
-    rows through a pandas DataFrame makes the Arrow conversion happen ON
-    THE DRIVER and yields a LocalRelation: broadcasts build directly from
-    driver memory with no job and no Python workers (measured 2x faster
-    per broadcast use; guide §4.1 — keep the Python boundary out of the
-    plan). Values are identical; falls back to the plain path if the
-    Arrow conversion cannot represent the rows."""
-    import pandas as pd
+    BroadcastExchange that consumes it — launches a task set whose tasks
+    round-trip through Python workers to unpickle the rows, and Catalyst
+    cannot see through it, so an empty frame still plans every join fed
+    by it. Here the rows become one ``pyarrow.Table`` typed by the Spark
+    schema, converted ON THE DRIVER and handed to the JVM, which keeps
+    the Python boundary out of the plan.
 
-    try:
-        if isinstance(schema, str):
-            from pyspark.sql.types import _parse_datatype_string
+    - Up to ``spark.sql.execution.arrow.localRelationThreshold`` bytes,
+      zero rows included, the plan is a ``LocalRelation``: broadcasts
+      build from driver memory with no job, and an empty one lets
+      ``PropagateEmptyRelation`` fold away every inner join and
+      aggregate over it at optimization time.
+    - Above the threshold it is a JVM scan of the Arrow batches, still
+      with no Python worker.
+    - A value Arrow cannot represent in its column's type raises; there
+      is no silent fallback to the Python-RDD plan.
 
-            schema = _parse_datatype_string(schema)
-        names = [f.name for f in schema.fields] if hasattr(schema, "fields") else None
-        if names is None:
-            return spark.createDataFrame(list(rows), schema)
-        pdf = pd.DataFrame([tuple(r) for r in rows], columns=names, dtype=object)
-        df = spark.createDataFrame(pdf, schema)
-        # only accept the fast path if it actually produced a LocalRelation
-        if df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation":
-            return df
-    except Exception:
-        pass
-    return spark.createDataFrame(list(rows), schema)
+    ``schema`` is a ``StructType`` or a DDL string; rows are tuples or
+    ``Row``s in schema order."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = [tuple(r) for r in rows]
+    table = pa.table(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread(df, min_partitions: int | None = None):

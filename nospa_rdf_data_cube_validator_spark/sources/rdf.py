@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import qb, terms
+from ..session import local_frame
 
 # --------------------------------------------------------------------------
 # N-Triples: distributed parse
@@ -668,9 +669,7 @@ def write_rdfxml(triples: DataFrame, path: str, mode: str = "overwrite") -> None
             ns_map[ns] = f"ns{len(ns_map)}"
         qname[p] = f"{ns_map[ns]}:{local}"
     spark = triples.sparkSession
-    qn = F.broadcast(
-        spark.createDataFrame([(p, q) for p, q in qname.items()], "pred string, qn string")
-    )
+    qn = F.broadcast(local_frame(spark, qname.items(), "pred string, qn string"))
 
     subj_attr = F.when(
         F.col("subj").startswith("_:"),
@@ -777,7 +776,7 @@ def read_rdfxml_dir(spark: SparkSession, path: str, glob: str = "part-*") -> Dat
     import hashlib
 
     if not _glob.glob(os.path.join(path, glob)):
-        return spark.createDataFrame([], terms.TRIPLES_SCHEMA)
+        return local_frame(spark, [], terms.TRIPLES_SCHEMA)
     raw = spark.read.text(os.path.join(path, glob), wholetext=True).select(
         F.input_file_name().alias("src"), "value"
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from . import qb
+from .session import local_frame
 
 KIND_IRI = "iri"
 KIND_BNODE = "bnode"
@@ -80,10 +81,10 @@ def lit_row(subj: str, pred: str, lexical: str, datatype: str = "", lang: str = 
 
 
 def triples_df(spark: SparkSession, rows) -> DataFrame:
-    """Build a canonical triples DataFrame from python rows (test/fixture path)."""
-    return spark.createDataFrame(list(rows), TRIPLES_SCHEMA).dropDuplicates(
-        ["subj", "pred", "obj"]
-    )
+    """Build a canonical triples DataFrame from driver-side rows: the store
+    of the Turtle and RDF/XML readers, and of test fixtures. The rows become
+    a ``local_frame`` (no Python-RDD plan); duplicate triples are dropped."""
+    return local_frame(spark, rows, TRIPLES_SCHEMA).dropDuplicates(["subj", "pred", "obj"])
 
 
 def is_iri(col: str = "obj_kind") -> F.Column:

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -13,3 +14,22 @@ def spark():
     s = get_spark(app_name="nospa-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(action)``: the Spark jobs ``action`` launches, counted
+    by a job group of its own."""
+
+    def count(action) -> int:
+        sc = spark.sparkContext
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -72,3 +72,20 @@ def test_golden_cube_passes(validator, ic):
 
 def test_golden_cube_ic4_flags_sex(validator):
     assert _col_set(validator.ic4(), "dim") == {fx.SEX}
+
+
+@pytest.mark.parametrize("ic", ["ic15", "ic16", "ic19", "ic20", "ic21"])
+def test_absent_features_plan_away(golden_store, ic):
+    """The golden cube has no qb:measureType, no qb:codeList and no
+    hierarchical code list, so the metadata frames these ICs join are empty
+    local relations and the optimizer folds each IC into an empty
+    LocalRelation: no observation-scale scan is left to run."""
+    plan = getattr(CubeValidator(golden_store), ic)()._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert "LogicalRDD" not in plan.toString()
+
+
+def test_validate_all_job_count(golden_store, spark_jobs):
+    """Building all 21 IC plans runs only the driver-side metadata collects;
+    the empty-feature ICs cost no job of their own."""
+    assert spark_jobs(lambda: CubeValidator(golden_store).validate_all()) <= 2

@@ -573,6 +573,27 @@ def test_turtle_whitespace_before_datatype_marker(spark, tmp_path):
         read_turtle(spark, str(bad))
 
 
+def test_driver_parsed_store_has_no_python_rdd(spark, tmp_path):
+    """The Turtle reader's store (and the empty RDF/XML directory frame) is a
+    local relation: no ``LogicalRDD`` node, so scanning it never runs Python
+    workers. Duplicate triples are still dropped."""
+    from nospa_rdf_data_cube_validator_spark.sources.rdf import read_rdfxml_dir
+
+    p = tmp_path / "small.ttl"
+    p.write_text(
+        "@prefix eg: <http://example.org/ns#> .\n"
+        'eg:s eg:p eg:o ; eg:q "v"@en .\n'
+        "eg:s eg:p eg:o .\n"
+    )
+    df = read_turtle(spark, str(p))
+    assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert df.count() == 2
+    empty = tmp_path / "no_parts"
+    empty.mkdir()
+    plan = read_rdfxml_dir(spark, str(empty))._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def test_turtle_rejects_n3_only_syntax(spark, tmp_path):
     """The .n3 dispatch is a Turtle-compatible SUBSET: N3 formulas/rules/
     quantifiers must fail loudly (Jena parity: reference parses N3 fully,
@@ -912,29 +933,14 @@ def test_stage_runner_versioned_snapshots_time_travel(spark, tmp_path):
     assert runner.read_snapshot("nums", version=2).count() == 3
 
 
-def _commit_jobs(spark, group: str, action) -> int:
-    """Spark jobs ``action`` launches, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_stage_commit_is_one_write(spark, tmp_path):
+def test_stage_commit_is_one_write(spark, spark_jobs, tmp_path):
     """Committing a stage launches exactly the jobs of a bare parquet write
     of the same frame: the read-back schema, the lineage and the manifest
     row count all come from the committed files without a Spark job."""
-    import uuid
-
     df = spark.range(300).selectExpr("id", "cast(id % 7 as string) AS s").repartition(3)
     runner = StageRunner(spark, str(tmp_path / "wd"))
-    tag = uuid.uuid4().hex
-    bare = _commit_jobs(spark, f"bare-{tag}", lambda: df.write.parquet(str(tmp_path / "bare")))
-    staged = _commit_jobs(spark, f"stage-{tag}", lambda: runner.run("nums", lambda: df))
+    bare = spark_jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
+    staged = spark_jobs(lambda: runner.run("nums", lambda: df))
     assert bare > 0
     assert staged == bare
 
