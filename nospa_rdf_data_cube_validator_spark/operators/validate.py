@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .. import qb, terms
 from ..plans.algebra import TripleStore, path_join, star_fetch, star_subjects
 from ..plans.closure import transitive_closure
+from ..session import local_frame
 
 _EMPTY_STR_ARRAY = "array()"
 
@@ -100,10 +101,10 @@ class CubeValidator:
     # ------------------------------------------------------------------
     # shared sub-plans (all cached; metadata ones are tiny)
     # ------------------------------------------------------------------
-    #: driver-materialization guard for metadata frames: DSD/component/
-    #: code-list structures are human-authored and stay schema-scale at any
-    #: observation scale, but a hostile input could exceed it — over the
-    #: cap the frame stays distributed (same plan as before).
+    #: guard on the schema slice the validator holds on the driver: DSD/
+    #: component/code-list structures are human-authored and stay
+    #: schema-scale at any observation scale, so a store whose schema
+    #: slice exceeds this many triples is rejected (see _meta_store).
     METADATA_CAP = 1_000_000
 
     def _cached(self, key: str, build) -> DataFrame:
@@ -114,22 +115,19 @@ class CubeValidator:
     def _local(self, df: DataFrame) -> DataFrame:
         """Driver-materialize a METADATA-scale frame as a local relation.
 
-        Every memoized metadata frame (ds_list, ds_comp_props, the
-        defined-property sets, the per-dataset dim arrays ...) is consumed
-        by several constraint plans, and each consumption re-evaluates the
-        whole subtree — at bench scale that is 4-8 extra full scans of the
-        observation-scale store per validator, each inside its own
-        broadcast job (guide §2.4: remove work, not just shuffles; the
-        reference engine likewise holds schema structures in memory).
-        Collecting once and re-creating a local relation makes every
-        downstream broadcast build free. Values are unchanged, so every
-        icN() result is identical. Frames larger than METADATA_CAP fall
-        back to the distributed plan unchanged."""
+        The plan-derived metadata frames (measure_type_datasets,
+        _ds_measures_arr, _dim_code_lists, _hcl, _pcp_raw, _hcl_roots) are
+        each consumed by several constraint plans, and each consumption
+        re-evaluates the whole subtree inside its own broadcast job (guide
+        §2.4: remove work, not just shuffles; the reference engine likewise
+        holds schema structures in memory). Collecting once and re-creating
+        a local relation makes every downstream broadcast build free.
+        Values are unchanged, so every icN() result is identical. Frames
+        larger than METADATA_CAP fall back to the distributed plan
+        unchanged."""
         rows = df.limit(self.METADATA_CAP + 1).collect()
         if len(rows) > self.METADATA_CAP:
             return df
-        from ..session import local_frame
-
         # LocalRelation, not a Python-RDD plan, for any row count: broadcasts
         # of these frames build driver-side with no job, and an EMPTY one (a
         # cube without qb:measureType, qb:codeList or hierarchies) lets the
@@ -187,11 +185,11 @@ class CubeValidator:
     def _meta_store(self) -> TripleStore:
         """A store over ONLY the schema-vocabulary triples, driver-
         materialized (one scan, one collect); all memoized metadata frames
-        build from it with zero further passes over the full store. Falls
-        back transparently to a distributed (but still filtered) frame
-        over METADATA_CAP. When local, the collected rows are stashed
-        (``meta_rows`` memo) so the hot-path metadata builders below can
-        derive their frames in pure Python with ZERO Spark jobs."""
+        build from it with zero further passes over the full store. The
+        collected rows are stashed (``meta_rows`` memo) so the metadata
+        builders below derive their frames in pure Python with ZERO Spark
+        jobs. A schema slice over METADATA_CAP triples raises ValueError:
+        the validator, like the reference, holds the schema in memory."""
         def build():
             tv = self.store.term_value
             cond = F.col("pred").isin([tv(p) for p in self._META_PREDS]) | (
@@ -201,19 +199,19 @@ class CubeValidator:
             df = self.store.df.where(cond)
             rows = df.limit(self.METADATA_CAP + 1).collect()
             if len(rows) > self.METADATA_CAP:
-                return self.store.with_df(df)
+                raise ValueError(
+                    f"schema slice exceeds METADATA_CAP={self.METADATA_CAP} triples "
+                    "(structure, component, code-list and hierarchy declarations)"
+                )
             self._memo["meta_rows"] = rows
-            from ..session import local_frame
-
             return self.store.with_df(local_frame(df.sparkSession, rows, df.schema))
 
         return self._cached("meta_store", build)
 
-    def _meta_rows(self):
-        """The collected schema-triple rows, or None when the meta store
-        stayed distributed (hostile >cap metadata)."""
+    def _meta_rows(self) -> list:
+        """The collected schema-triple rows (see _meta_store)."""
         self._meta_store()
-        return self._memo.get("meta_rows")
+        return self._memo["meta_rows"]
 
     def obs_ds(self) -> DataFrame:
         """(obs, ds): the observation-scale qb:dataSet edge table."""
@@ -231,18 +229,11 @@ class CubeValidator:
         """Datasets = subjects of qb:structure (the reference's iteration
         domain for per-dataset checks, e.g. ValidatorIC11_12.java:30-41)."""
         def build():
-            rows = self._meta_rows()
-            if rows is not None:
-                from ..session import local_frame
-
-                tv = self.store.term_value(qb.QB_STRUCTURE)
-                vals = sorted({r.subj for r in rows if r.pred == tv})
-                self._memo["ds_list_vals"] = vals
-                return local_frame(
-                    self._spark(), [(v,) for v in vals], f"ds {self.store.term_sql_type}"
-                )
-            return self._local(
-                self._meta_store().p(qb.QB_STRUCTURE).select(F.col("subj").alias("ds")).distinct()
+            tv = self.store.term_value(qb.QB_STRUCTURE)
+            vals = sorted({r.subj for r in self._meta_rows() if r.pred == tv})
+            self._memo["ds_list_vals"] = vals
+            return local_frame(
+                self._spark(), [(v,) for v in vals], f"ds {self.store.term_sql_type}"
             )
 
         return self._cached("ds_list", build)
@@ -250,78 +241,51 @@ class CubeValidator:
     def ds_comp_props(self) -> DataFrame:
         """(ds, prop, prop_kind): ?ds qb:structure/qb:component/qb:componentProperty ?prop.
 
-        Pure-Python derivation (zero Spark jobs) when the schema triples
-        are driver-known (_meta_rows); the distributed join fallback
-        otherwise. Values identical: the same structure/component/
+        Pure-Python derivation from the driver-held schema triples
+        (_meta_rows), zero Spark jobs: the structure/component/
         componentProperty hops, distinct, sorted deterministically."""
         def build():
             rows = self._meta_rows()
-            if rows is not None:
-                from ..session import local_frame
-
-                tv = self.store.term_value
-                t_struct, t_comp, t_cp = (
-                    tv(qb.QB_STRUCTURE),
-                    tv(qb.QB_COMPONENT),
-                    tv(qb.QB_COMPONENT_PROPERTY),
-                )
-                ds_dsd = [(r.subj, r.obj) for r in rows if r.pred == t_struct]
-                dsd_specs: dict = {}
-                spec_props: dict = {}
-                for r in rows:
-                    if r.pred == t_comp:
-                        dsd_specs.setdefault(r.subj, []).append(r.obj)
-                    elif r.pred == t_cp:
-                        spec_props.setdefault(r.subj, []).append((r.obj, r.obj_kind))
-                out = {
-                    (ds, prop, kind)
-                    for ds, dsd in ds_dsd
-                    for spec in dsd_specs.get(dsd, ())
-                    for prop, kind in spec_props.get(spec, ())
-                }
-                t = self.store.term_sql_type
-                self._memo["ds_comp_props_rows"] = sorted(out)
-                return local_frame(
-                    self._spark(), sorted(out), f"ds {t}, prop {t}, prop_kind string"
-                )
-            meta = self._meta_store()
-            structure = meta.p(qb.QB_STRUCTURE).select(
-                F.col("subj").alias("ds"), F.col("obj").alias("dsd")
+            tv = self.store.term_value
+            t_struct, t_comp, t_cp = (
+                tv(qb.QB_STRUCTURE),
+                tv(qb.QB_COMPONENT),
+                tv(qb.QB_COMPONENT_PROPERTY),
             )
-            component = meta.p(qb.QB_COMPONENT).select(
-                F.col("subj").alias("dsd"), F.col("obj").alias("spec")
-            )
-            comp_prop = meta.p(qb.QB_COMPONENT_PROPERTY, with_kind=True).select(
-                F.col("subj").alias("spec"),
-                F.col("obj").alias("prop"),
-                F.col("obj_kind").alias("prop_kind"),
-            )
-            return self._local(
-                structure.join(F.broadcast(component), "dsd")
-                .join(F.broadcast(comp_prop), "spec")
-                .select("ds", "prop", "prop_kind")
-                .distinct()
-            )
+            ds_dsd = [(r.subj, r.obj) for r in rows if r.pred == t_struct]
+            dsd_specs: dict = {}
+            spec_props: dict = {}
+            for r in rows:
+                if r.pred == t_comp:
+                    dsd_specs.setdefault(r.subj, []).append(r.obj)
+                elif r.pred == t_cp:
+                    spec_props.setdefault(r.subj, []).append((r.obj, r.obj_kind))
+            out = sorted({
+                (ds, prop, kind)
+                for ds, dsd in ds_dsd
+                for spec in dsd_specs.get(dsd, ())
+                for prop, kind in spec_props.get(spec, ())
+            })
+            t = self.store.term_sql_type
+            self._memo["ds_comp_props_rows"] = out
+            return local_frame(self._spark(), out, f"ds {t}, prop {t}, prop_kind string")
 
         return self._cached("ds_comp_props", build)
 
     def _typed_local(self, key: str, rdf_class: str) -> DataFrame:
-        """typed() subjects as a job-free LocalRelation when the schema
-        triples are driver-known; the distributed _local fallback
-        otherwise (column name ``subj`` either way)."""
+        """typed() subjects of the driver-held schema triples as a
+        job-free LocalRelation (column ``subj``); the sorted values are
+        stashed as ``<key>_vals``."""
         def build():
-            rows = self._meta_rows()
-            if rows is not None:
-                from ..session import local_frame
-
-                t_type = self.store.term_value(qb.RDF_TYPE)
-                t_cls = self.store.term_value(rdf_class)
-                vals = sorted({r.subj for r in rows if r.pred == t_type and r.obj == t_cls})
-                self._memo[key + "_vals"] = vals
-                return local_frame(
-                    self._spark(), [(v,) for v in vals], f"subj {self.store.term_sql_type}"
-                )
-            return self._local(self._meta_store().typed(rdf_class))
+            t_type = self.store.term_value(qb.RDF_TYPE)
+            t_cls = self.store.term_value(rdf_class)
+            vals = sorted(
+                {r.subj for r in self._meta_rows() if r.pred == t_type and r.obj == t_cls}
+            )
+            self._memo[key + "_vals"] = vals
+            return local_frame(
+                self._spark(), [(v,) for v in vals], f"subj {self.store.term_sql_type}"
+            )
 
         return self._cached(key, build)
 
@@ -483,46 +447,27 @@ class CubeValidator:
         empty (a structure-bearing dataset with zero dims makes every obs
         after the first a duplicate under the reference's empty-key set).
 
-        Pure-Python derivation (zero Spark jobs) when the schema triples
-        are driver-known — the previous chain of small jobs over local
-        relations (semi-join, groupBy, left join) cost more in scheduling
-        than the data justifies; values identical, pinned by the memoized
-        ``ds_dims_rows`` also feeding _ds_dim_pos and _tagged."""
+        Pure-Python derivation (zero Spark jobs) from the driver-held
+        schema triples; the memoized ``ds_dims_rows`` also feed
+        _ds_dim_pos, _tagged and ic11's wide-dataset probe."""
         def build():
             self.ds_comp_props(), self.dims_defined(), self.ds_list()
-            dcp = self._memo.get("ds_comp_props_rows")
-            dims = self._memo.get("dims_defined_vals")
-            dss = self._memo.get("ds_list_vals")
-            if dcp is not None and dims is not None and dss is not None:
-                from ..session import local_frame
-
-                dimset = set(dims)
-                per_ds: dict = {}
-                for ds, prop, kind in dcp:
-                    if kind == terms.KIND_IRI and prop in dimset:
-                        per_ds.setdefault(ds, set()).add(prop)
-                rows = [(ds, sorted(per_ds.get(ds, ()))) for ds in dss]
-                self._memo["ds_dims_rows"] = rows
-                t = self.store.term_sql_type
-                return local_frame(self._spark(), rows, f"ds {t}, dims array<{t}>")
-            ds_dims = (
-                self.ds_comp_props()
-                .where(F.col("prop_kind") == terms.KIND_IRI)
-                .join(self.dims_defined().withColumnRenamed("subj", "prop"), "prop", "left_semi")
-                .select("ds", "prop")
-                .distinct()
-            )
-            grouped = ds_dims.groupBy("ds").agg(F.sort_array(F.collect_set("prop")).alias("dims"))
-            return self._local(
-                self.ds_list().join(grouped, "ds", "left").withColumn(
-                    "dims",
-                    F.coalesce(
-                        "dims", F.expr(_EMPTY_STR_ARRAY).cast(f"array<{self.store.term_sql_type}>")
-                    ),
-                )
-            )
+            dimset = set(self._memo["dims_defined_vals"])
+            per_ds: dict = {}
+            for ds, prop, kind in self._memo["ds_comp_props_rows"]:
+                if kind == terms.KIND_IRI and prop in dimset:
+                    per_ds.setdefault(ds, set()).add(prop)
+            rows = [(ds, sorted(per_ds.get(ds, ()))) for ds in self._memo["ds_list_vals"]]
+            self._memo["ds_dims_rows"] = rows
+            t = self.store.term_sql_type
+            return local_frame(self._spark(), rows, f"ds {t}, dims array<{t}>")
 
         return self._cached("ds_dims_arr", build)
+
+    def _ds_dims_rows(self) -> list:
+        """[(ds, sorted dims)] behind ds_dims_arr (see there)."""
+        self.ds_dims_arr()
+        return self._memo["ds_dims_rows"]
 
     def _subj_clustered(self) -> bool:
         """True when the store's scan already provides hash-clustering on
@@ -558,37 +503,16 @@ class CubeValidator:
         stops predicate pushdown from splitting the shared exchange back
         into per-branch scans.
 
-        Returns (tagged df, dim-membership Column or None, all_dims df);
-        the Column is None only in the >METADATA_CAP fallback, where
-        callers must semi-join ``all_dims`` instead."""
+        Returns (tagged df, dim-membership Column)."""
         def build():
-            all_dims = (
-                self.ds_dims_arr().select(F.explode("dims").alias("pred")).distinct()
-            )
+            vals = sorted({p for _ds, dims in self._ds_dims_rows() for p in dims})
+            # metadata-scale dim set: a codegen'd InSet filter — no
+            # broadcast build job at all
+            is_dim = F.col("pred").isin(vals) if vals else F.lit(False)
             ds_pred = self.store.lit(qb.QB_DATASET_PROP)
-            dd_rows = self._memo.get("ds_dims_rows")
-            if dd_rows is not None:  # driver-known: no collect job at all
-                vals = sorted({p for _ds, dims in dd_rows for p in dims})
-                dim_rows = vals
-            else:
-                dim_rows = [
-                    r["pred"] for r in all_dims.limit(self.METADATA_CAP + 1).collect()
-                ]
-                vals = dim_rows
-            if len(dim_rows) <= self.METADATA_CAP:
-                # metadata-scale dim set: a codegen'd InSet filter — no
-                # broadcast build job at all
-                is_dim = F.col("pred").isin(vals) if vals else F.lit(False)
-                tagged = self.store.df.where(is_dim | (F.col("pred") == ds_pred))
-            else:  # hostile metadata: keep the broadcast semi-join form
-                preds = all_dims.unionByName(
-                    all_dims.sparkSession.range(1).select(
-                        ds_pred.cast(self.store.term_sql_type).alias("pred")
-                    )
-                )
-                is_dim = None
-                tagged = self.store.df.join(F.broadcast(preds), "pred", "left_semi")
-            tagged = tagged.select("subj", "pred", "obj")
+            tagged = self.store.df.where(is_dim | (F.col("pred") == ds_pred)).select(
+                "subj", "pred", "obj"
+            )
             if not self._subj_clustered():
                 tagged = tagged.repartition(F.col("subj"))
             # NOT eagerly materialized: an eager count() here would let
@@ -598,23 +522,21 @@ class CubeValidator:
             # measured A/B put the extra materialization barrier ABOVE
             # the cost of those small exchanges (base+ic11 4.35 s lazy vs
             # 5.62 s eager at bench scale) — the fused first action wins.
-            return (self._persist(tagged), is_dim, all_dims)
+            return (self._persist(tagged), is_dim)
 
         return self._cached("ic11_12_tagged", build)
 
     def _dim_rows(self) -> DataFrame:
         """Dimension-valued (subj, pred, obj) rows off the tagged cache."""
-        tagged, is_dim, all_dims = self._tagged()
-        if is_dim is not None:
-            return tagged.where(is_dim)
-        return tagged.join(F.broadcast(all_dims), "pred", "left_semi")
+        tagged, is_dim = self._tagged()
+        return tagged.where(is_dim)
 
     def _obs_ds_dedup(self) -> DataFrame:
         """Distinct (obs, ds) via groupBy(obs) collect_set + explode off
         the tagged cache: matches the value-SET semantics (an obs is
         checked once per dataset it belongs to) and rides the subj
         clustering — no exchange of its own."""
-        tagged, _, _ = self._tagged()
+        tagged, _ = self._tagged()
         ds_pred = self.store.lit(qb.QB_DATASET_PROP)
         return (
             tagged.where(F.col("pred") == ds_pred)
@@ -718,30 +640,13 @@ class CubeValidator:
         with their position in the sorted dims array; pos is NULL for
         datasets declaring more than 63 dims (no bitmask slot)."""
         def build():
-            self.ds_dims_arr()
-            dd_rows = self._memo.get("ds_dims_rows")
-            if dd_rows is not None:  # driver-known: zero jobs
-                from ..session import local_frame
-
-                out = [
-                    (ds, p, i if len(dims) <= 63 else None)
-                    for ds, dims in dd_rows
-                    for i, p in enumerate(dims)
-                ]
-                t = self.store.term_sql_type
-                return local_frame(self._spark(), out, f"ds {t}, pred {t}, pos int")
-            d = self.ds_dims_arr().select(
-                "ds",
-                F.posexplode("dims").alias("pos0", "pred"),
-                F.size("dims").alias("n_dims"),
-            )
-            return self._local(
-                d.select(
-                    "ds",
-                    "pred",
-                    F.when(F.col("n_dims") <= 63, F.col("pos0")).alias("pos"),
-                )
-            )
+            out = [
+                (ds, p, i if len(dims) <= 63 else None)
+                for ds, dims in self._ds_dims_rows()
+                for i, p in enumerate(dims)
+            ]
+            t = self.store.term_sql_type
+            return local_frame(self._spark(), out, f"ds {t}, pred {t}, pos int")
 
         return self._cached("ds_dim_pos", build)
 
@@ -770,16 +675,8 @@ class CubeValidator:
         )
         # the >63-dim fallback subtree joins the observation-scale store
         # again, so it enters the plan only when such a dataset EXISTS
-        # (metadata-scale probe, memoized)
-        def probe_wide():
-            self.ds_dims_arr()
-            dd_rows = self._memo.get("ds_dims_rows")
-            if dd_rows is not None:
-                return any(len(dims) > 63 for _ds, dims in dd_rows)
-            return bool(self._ds_dim_pos().where(F.col("pos").isNull()).limit(1).collect())
-
-        has_wide = self._cached("ic11_has_wide_ds", probe_wide)
-        if not has_wide:
+        # (driver-side probe of the schema rows)
+        if not any(len(dims) > 63 for _ds, dims in self._ds_dims_rows()):
             return masked.distinct()
         wide = incomplete.where(F.col("present_mask").isNull())
         # >63-dim datasets: exact anti-join limited to those rows

@@ -51,7 +51,7 @@ def local_frame(spark: SparkSession, rows, schema):
     return spark.createDataFrame(table, schema)
 
 
-def spread(df, min_partitions: int | None = None):
+def spread(df):
     """Parallelism floor for heavy map-side pipelines (Python kernels,
     regex scans, text generation): repartition only when the plan would
     otherwise scan in fewer partitions than the session's default
@@ -69,7 +69,7 @@ def spread(df, min_partitions: int | None = None):
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = sc.defaultParallelism
     # Decide from the OPTIMIZED plan's size estimate instead of
     # df.rdd.getNumPartitions(): the rdd probe forces a full physical
     # planning pass (~50-150 ms per fresh frame, paid again when the real
@@ -185,12 +185,12 @@ def get_spark(
         # its entire partition by long URI strings — measured as the
         # dominant CPU in the ic11/12 base build. The threshold is sized
         # from the heap the concurrent tasks share (oha_fallback_threshold);
-        # SPARK_GRAFT_OHA_FALLBACK overrides it (guide §2.3: the fallback
-        # remains the OOM guard, it just should not fire at 128 keys).
+        # a caller overrides it through extra_conf, which is applied last
+        # (guide §2.3: the fallback remains the OOM guard, it just should
+        # not fire at 128 keys).
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OHA_FALLBACK")
-            or str(oha_fallback_threshold(driver_memory, master)),
+            str(oha_fallback_threshold(driver_memory, master)),
         )
         # Allow shuffled-hash joins where the per-partition build side fits
         # (guide §3.1/§9): the validator's obs-keyed joins otherwise pay two

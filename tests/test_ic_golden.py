@@ -89,3 +89,12 @@ def test_validate_all_job_count(golden_store, spark_jobs):
     """Building all 21 IC plans runs only the driver-side metadata collects;
     the empty-feature ICs cost no job of their own."""
     assert spark_jobs(lambda: CubeValidator(golden_store).validate_all()) <= 2
+
+
+def test_schema_slice_over_cap_is_rejected(golden_store, monkeypatch):
+    """The schema slice is held on the driver; one larger than
+    METADATA_CAP triples is rejected instead of validated some other way."""
+    v = CubeValidator(golden_store)
+    monkeypatch.setattr(v, "METADATA_CAP", 5)
+    with pytest.raises(ValueError, match="METADATA_CAP"):
+        v.validate_all()
