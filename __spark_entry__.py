@@ -970,8 +970,8 @@ def _gate_workdir_housekeeping(workdir: str) -> None:
 
 
 def q_bucketed_cube_ic12(spark, sf_dir):
-    """CubeValidator.ic12 off the AT-REST bucketed table — the default
-    run_pipeline(bucketed=True) layout, end to end through
+    """CubeValidator.ic12 off the AT-REST bucketed table — the layout
+    run_pipeline(validate=True) always builds, end to end through
     StageRunner.run_table: the seeded lineitem cube is materialized as a
     subj-bucketed managed table (HashPartitioning(subj) at rest, no
     observation-scale Exchange in the validate plan) and the validator

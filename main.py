@@ -1,17 +1,18 @@
 """spark-submit entry point.
 
 Usage:
-  spark-submit --py-files engine.zip main.py validate <cube.{ttl,nt,parquet}> [--report DIR]
-  spark-submit --py-files engine.zip main.py pipeline <transcripts.parquet> <workdir> [--report DIR]
+  spark-submit --py-files engine.zip main.py validate <cube.{ttl,nt,parquet}> [--report DIR] [--strict]
+  spark-submit --py-files engine.zip main.py pipeline <transcripts.parquet> <workdir> [--report DIR] [--no-encoded]
   spark-submit --py-files engine.zip main.py export <cube.{ttl,nt,xml,parquet}> <out> [--format nt|ttl|xml|parquet] [--normalize]
   spark-submit --py-files engine.zip main.py stream-dups <obs_dir> <out_dir> --checkpoint DIR [--once]
 
 ``validate`` mirrors the reference CLI (Main.java:21-58): load an RDF cube,
-normalize, run all 21 integrity constraints, write validation_result_<ts>.md.
-It exits 0 when every IC passes and 2 when any IC has violations.
-``pipeline`` runs the full KG construction over a transcript table with
-checkpoint-resume in <workdir> (re-running after a kill resumes from the
-last completed snapshot).
+normalize, run all 21 integrity constraints, write validation_result_<ts>.md
+(pipeline.validate_file). It exits 0 when every IC passes and 2 when any
+IC has violations. ``pipeline`` runs the full KG construction over a
+transcript table with checkpoint-resume in <workdir> (re-running after a
+kill resumes from the last completed snapshot) and validates its at-rest
+cube the same way (pipeline.validate_store).
 
 Build the zip with: python tools/package.py -> dist/engine.zip
 """
@@ -25,60 +26,23 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nospa_rdf_data_cube_validator_spark.operators.normalize import normalize
-from nospa_rdf_data_cube_validator_spark.operators.validate import CubeValidator
-from nospa_rdf_data_cube_validator_spark.pipeline import run_pipeline
+from nospa_rdf_data_cube_validator_spark.pipeline import run_pipeline, validate_file, validate_store
 from nospa_rdf_data_cube_validator_spark.plans.algebra import TripleStore
-from nospa_rdf_data_cube_validator_spark.report import write_validation_report
 from nospa_rdf_data_cube_validator_spark.session import get_spark
 from nospa_rdf_data_cube_validator_spark.sources.rdf import read_rdf
 from nospa_rdf_data_cube_validator_spark.sources.transcripts import read_transcripts
 
 
 def cmd_validate(spark, args) -> int:
-    store = normalize(TripleStore(read_rdf(spark, args.input)))
-    store.df = store.df.localCheckpoint(eager=True)
-    report_dir = args.report or "."
-    os.makedirs(report_dir, exist_ok=True)
-    with CubeValidator(store, strict_w3c=args.strict) as v:  # caches released once the report is out
-        text, counts = write_validation_report(
-            v.validate_all(),
-            md_path=report_dir,
-            parquet_dir=os.path.join(report_dir, "violations"),
-        )
+    _, text, counts = validate_file(spark, args.input, args.report or ".", strict_w3c=args.strict)
     print(text)
     return 2 if any(counts.values()) else 0
 
 
 def cmd_pipeline(spark, args) -> int:
     transcripts = read_transcripts(spark, args.input)
-    result = run_pipeline(
-        spark,
-        transcripts,
-        args.workdir,
-        validate=True,
-        encoded=args.encoded,
-        bucketed=args.bucketed,
-    )
-    violations = result["violations"]
-    if args.encoded:
-        # id-space violations -> human-readable report: decode the term-
-        # valued key columns in place (small frames; decode broadcasts
-        # them). Diagnostic columns ride through unchanged — scalar counts
-        # as-is, array-valued term columns (datasets/code_lists) id-space.
-        from nospa_rdf_data_cube_validator_spark.operators.validate import IC_KEY_COLUMNS
-
-        store = result["store"]
-        violations = {
-            name: store.decode(df, IC_KEY_COLUMNS[name])
-            for name, df in violations.items()
-        }
-    report_dir = args.report or args.workdir
-    write_validation_report(
-        violations,
-        md_path=report_dir,
-        parquet_dir=os.path.join(report_dir, "violations"),
-    )
-    result["validator"].unpersist()  # release the validator's obs-scale caches
+    result = run_pipeline(spark, transcripts, args.workdir, validate=True, encoded=args.encoded)
+    validate_store(result["store"], args.report or args.workdir)
     print(f"triples: {result['triples'].count()}")
     return 0
 
@@ -167,14 +131,6 @@ def main() -> int:
         help="keep the at-rest triples dictionary-encoded (int64 term ids);"
         " validation runs on ids, reports decode (default on; --no-encoded"
         " for the plain string form)",
-    )
-    p.add_argument(
-        "--bucketed",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="materialize the normalized cube as a subj-bucketed table and"
-        " validate off it — no observation-scale shuffle in the IC plans"
-        " (default on; --no-bucketed for a localCheckpoint instead)",
     )
     e = sub.add_parser(
         "export", help="re-serialize an RDF cube (exportModel parity, any format)"

@@ -50,14 +50,14 @@ def _obj_as_subj(store: TripleStore, pred: str) -> DataFrame:
     )
 
 
-def normalize_phase1(store: TripleStore, defer_dedup: bool = False) -> TripleStore:
+def normalize_phase1(store: TripleStore) -> TripleStore:
     """N1 (type closure) + N2 (property closure), Normalizer.java:26-71.
 
     Branch scans hit the (checkpointed/cached) store directly — in-memory
     rescans are cheaper than materializing a filtered cache.
 
-    defer_dedup=True returns the union WITHOUT the set-dedup shuffle (a
-    multiset); normalize() uses it to pay for one full-output dedup total
+    Returns the store unioned with the derived triples WITHOUT the set-dedup
+    shuffle (a multiset): normalize() pays for one full-output dedup total
     instead of one per phase."""
     rel = store.df
     rel_store = store
@@ -108,14 +108,7 @@ def normalize_phase1(store: TripleStore, defer_dedup: bool = False) -> TripleSto
     # full-column dedup: the non-key columns are branch constants (see
     # normalize() — codegen HashAggregate instead of SortAggregate+First)
     derived = derived.dropDuplicates()
-    if defer_dedup:
-        return _same_kind(store, store.df.unionByName(derived))
-    return store.union(derived)
-
-
-def _same_kind(store: TripleStore, df: DataFrame) -> TripleStore:
-    """A store of the same representation (string or encoded) over df."""
-    return store.with_df(df) if hasattr(store, "with_df") else TripleStore(df)
+    return store.with_df(store.df.unionByName(derived))
 
 
 def _ds_specs(store: TripleStore) -> DataFrame:
@@ -152,7 +145,7 @@ def _emit(values: DataFrame, target_col: str) -> DataFrame:
     )
 
 
-def normalize_phase2(store: TripleStore, defer_dedup: bool = False) -> TripleStore:
+def normalize_phase2(store: TripleStore) -> TripleStore:
     """N3-N5 attachment push-down (Normalizer.java:90-189).
 
     N3: dataset-attached component values copied onto every observation of
@@ -160,9 +153,10 @@ def normalize_phase2(store: TripleStore, defer_dedup: bool = False) -> TripleSto
         slice onto its member observations; N5: any *dimension* value
         sitting on a slice pushed to member observations.
 
-    Safe over a multiset store (defer_dedup pipeline): the metadata sides
-    all carry explicit distinct()s, and duplicate observation-side rows
-    only duplicate derived rows that the final dedup removes.
+    Returns the store unioned with the derived triples, a multiset like
+    phase 1's. Safe over a multiset store: the metadata sides all carry
+    explicit distinct()s, and duplicate observation-side rows only
+    duplicate derived rows that normalize()'s final dedup removes.
     """
     df = store.df
     ds_specs = _ds_specs(store)
@@ -237,16 +231,14 @@ def normalize_phase2(store: TripleStore, defer_dedup: bool = False) -> TripleSto
     n5 = _emit(slice_obs.join(F.broadcast(dim_vals), "slice"), "obs")
 
     derived = n3.unionByName(n4).unionByName(n5)
-    if defer_dedup:
-        return _same_kind(store, store.df.unionByName(derived))
-    return store.union(derived)
+    return store.with_df(store.df.unionByName(derived))
 
 
 def normalize(store: TripleStore) -> TripleStore:
     """Phase 1 then phase 2, matching NospaValidator.normalize() ordering
     (nonsparql/NospaValidator.java:72-78).
 
-    The phases run dedup-deferred and ONE dropDuplicates finishes the set
+    The phases return multisets and ONE dropDuplicates finishes the set
     semantics: the full-output dedup is the only observation-scale shuffle
     in normalization, so paying it once instead of once per phase halves
     the shuffle volume — the dominant cost at 100 TB. Output is identical
@@ -258,9 +250,9 @@ def normalize(store: TripleStore) -> TripleStore:
     unmaterialized union would re-execute the phase-1 derivation per scan
     (with the per-phase dedup the shuffle exchange used to serve that
     reuse role — keep the materialization when touching this)."""
-    p1 = normalize_phase1(store, defer_dedup=True)
-    p1 = _same_kind(p1, p1.df.localCheckpoint(eager=True))
-    multiset = normalize_phase2(p1, defer_dedup=True)
+    p1 = normalize_phase1(store)
+    p1 = p1.with_df(p1.df.localCheckpoint(eager=True))
+    multiset = normalize_phase2(p1)
     # FULL-column dedup on purpose: a subset-key dropDuplicates plans as
     # an Aggregate with First(obj_kind)/First(obj_datatype)/First(obj_lang)
     # — string buffers that force SortAggregate (two sorts of every row by
@@ -272,4 +264,4 @@ def normalize(store: TripleStore) -> TripleStore:
     # identical — and Jena's set semantics key on full node identity
     # anyway (a literal and an IRI with equal lexical form are distinct
     # triples in the reference model).
-    return _same_kind(multiset, multiset.df.dropDuplicates())
+    return multiset.with_df(multiset.df.dropDuplicates())

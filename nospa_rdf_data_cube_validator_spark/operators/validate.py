@@ -122,12 +122,10 @@ class CubeValidator:
         §2.4: remove work, not just shuffles; the reference engine likewise
         holds schema structures in memory). Collecting once and re-creating
         a local relation makes every downstream broadcast build free.
-        Values are unchanged, so every icN() result is identical. Frames
-        larger than METADATA_CAP fall back to the distributed plan
-        unchanged."""
-        rows = df.limit(self.METADATA_CAP + 1).collect()
-        if len(rows) > self.METADATA_CAP:
-            return df
+        Values are unchanged, so every icN() result is identical. Every
+        frame passed here derives from the schema slice, which _meta_store
+        already caps at METADATA_CAP triples."""
+        rows = df.collect()
         # LocalRelation, not a Python-RDD plan, for any row count: broadcasts
         # of these frames build driver-side with no job, and an EMPTY one (a
         # cube without qb:measureType, qb:codeList or hierarchies) lets the

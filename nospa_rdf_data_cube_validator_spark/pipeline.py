@@ -4,6 +4,9 @@ transcripts -> vectorized triple extraction -> entity linking ->
 canonicalization -> materialized (subj, pred, obj) edge table shaped as an
 RDF Data Cube -> NoSPA-style validation of the 21 ICs.
 
+Both CLI commands validate through :func:`validate_file` and
+:func:`validate_store`.
+
 Stages are checkpoint-resumable: each stage materializes to a parquet
 snapshot under the work dir (an Iceberg snapshot stand-in — this sandbox
 ships no Iceberg jars, the layout/manifest semantics are the same) and a
@@ -39,8 +42,10 @@ from .functions.linking import (
     surface_dict,
 )
 from .operators.normalize import normalize
-from .operators.validate import CubeValidator
+from .operators.validate import IC_KEY_COLUMNS, CubeValidator
 from .plans.algebra import TripleStore
+from .report import write_validation_report
+from .sources.rdf import read_rdf
 
 KG_NS = "http://example.org/kg#"
 OBS_NS = "http://example.org/kgobs#"
@@ -390,41 +395,77 @@ class StageRunner:
             return None
 
 
+def validate_store(
+    store: TripleStore, report_dir: str, strict_w3c: bool = False
+) -> tuple[str, dict[str, int]]:
+    """Run all 21 ICs over a normalized, materialized ``store`` and write
+    the report under ``report_dir`` (one parquet table per IC in
+    ``violations/`` plus ``validation_result_<ts>.md``), the reference's
+    validateAll + report (nonsparql/NospaValidator.java:83-103).
+
+    Term-valued key columns go through ``store.decode`` (the identity on a
+    string store), so an encoded store reports IRIs, not ids. The
+    validator's caches are released before this returns. Returns
+    ``(markdown text, {ic: violation count})``; ``report_dir`` must be on
+    the local filesystem."""
+    os.makedirs(report_dir, exist_ok=True)
+    with CubeValidator(store, strict_w3c=strict_w3c) as v:
+        violations = {
+            name: store.decode(df, IC_KEY_COLUMNS[name]) for name, df in v.validate_all().items()
+        }
+        return write_validation_report(
+            violations, parquet_dir=os.path.join(report_dir, "violations"), md_path=report_dir
+        )
+
+
+def validate_file(
+    spark: SparkSession, path: str, report_dir: str, strict_w3c: bool = False
+) -> tuple[TripleStore, str, dict[str, int]]:
+    """Read an RDF cube (any form ``read_rdf`` takes), normalize it and
+    validate it with :func:`validate_store` (Main.java:21-58). Returns
+    ``(normalized store, markdown text, {ic: violation count})``."""
+    store = normalize(TripleStore(read_rdf(spark, path)))
+    # every IC scans the normalized store: materialize it once, or each
+    # one re-runs the parse and both normalization phases
+    store = store.with_df(store.df.localCheckpoint(eager=True))
+    text, counts = validate_store(store, report_dir, strict_w3c=strict_w3c)
+    return store, text, counts
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     workdir: str,
     validate: bool = True,
     encoded: bool = True,
-    bucketed: bool = True,
     buckets: int = 32,
 ) -> dict:
-    """Full KG-construction run. Returns dict with stage DataFrames and
-    (optionally) the violation DataFrames of all 21 ICs.
+    """Full KG-construction run. Returns a dict of the stage DataFrames and,
+    with ``validate=True``, the normalized cube as ``result["store"]``,
+    ready for :func:`validate_store`.
 
-    The DEFAULT at-rest layout is encoded + bucketed — the round-3 sf1
-    bench (BENCH.md §9) measured the encoded validate path >= the string
-    path at the reference's million-obs scale (best 1.18x, median 1.68x)
-    on top of the 5-10x shuffle-byte reduction, and the bucketed table
-    removes the observation-scale Exchange from every IC plan; pass
-    encoded=False/bucketed=False for the plain string/parquet form.
+    The DEFAULT at-rest layout is encoded — the round-3 sf1 bench (BENCH.md
+    §9) measured the encoded validate path >= the string path at the
+    reference's million-obs scale (best 1.18x, median 1.68x) on top of the
+    5-10x shuffle-byte reduction; pass encoded=False for the plain string
+    form.
 
     encoded=True adds the dictionary-encoded at-rest layout: two more
     resumable snapshots (``term_dict``: order-preserving int64 term ids;
     ``triples_encoded``: the int64 triple table — the form a 100 TB
     deployment keeps at rest, encode once / validate many). Validation
-    then runs entirely on ids; the returned violations are id-space, with
-    ``result["store"]`` exposing ``decode()`` (violation sets are small, so
-    decode broadcasts them against the dictionary at report time).
+    then runs entirely on ids and ``validate_store`` decodes the report
+    through ``result["store"].decode()`` (violation sets are small, so
+    decode broadcasts them against the dictionary).
 
-    bucketed=True materializes the NORMALIZED cube as a subj-bucketed table
-    (stage ``cube_atrest``) and validates straight off it: every
-    per-observation aggregation/join in the 21 ICs is clustered by subj, so
-    the bucket spec's HashPartitioning removes the observation-scale
-    Exchange from the validate plans — at 100 TB that is the difference
-    between scanning the cube and re-shuffling it per validation run.
-    Composes with encoded=True (int64 ids bucket/sort cheaper than term
-    strings)."""
+    validate=True materializes the NORMALIZED cube as a subj-bucketed table
+    (stage ``cube_atrest``, ``buckets`` buckets) and returns the store over
+    it: every per-observation aggregation/join in the 21 ICs is clustered
+    by subj, so the bucket spec's HashPartitioning removes the
+    observation-scale Exchange from the validate plans — at 100 TB that is
+    the difference between scanning the cube and re-shuffling it per
+    validation run. Composes with encoded=True (int64 ids bucket/sort
+    cheaper than term strings)."""
     runner = StageRunner(spark, workdir)
 
     transcripts_df = runner.run("transcripts", lambda: transcripts)
@@ -458,18 +499,7 @@ def run_pipeline(
         else:
             base_store = TripleStore(triples)
         store = normalize(base_store)
-        if bucketed:
-            # the at-rest validate-many form: normalized cube, subj-bucketed
-            store.df = runner.run_table("cube_atrest", lambda: store.df, buckets=buckets)
-        else:
-            store.df = store.df.localCheckpoint(eager=True)
-        result["store"] = store
-        # Ownership transfer: the violation frames are lazy and built on the
-        # validator's persisted observation-scale caches, so the validator
-        # rides along in the result — the caller MUST call
-        # result["validator"].unpersist() after collecting/writing the
-        # violations (main.cmd_pipeline does), or the caches outlive the run.
-        validator = CubeValidator(store)
-        result["validator"] = validator
-        result["violations"] = validator.validate_all()
+        result["store"] = store.with_df(
+            runner.run_table("cube_atrest", lambda: store.df, buckets=buckets)
+        )
     return result

@@ -20,6 +20,8 @@ Conventions
 
 from __future__ import annotations
 
+import copy
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,46 +77,37 @@ class TripleStore:
         """Subjects with rdf:type <rdf_class>: one-column DF ``subj``."""
         return self.subjects_with(qb.RDF_TYPE, rdf_class)
 
-    def union(self, other: DataFrame) -> "TripleStore":
-        """Set-semantic union (Jena model.add re-adds are no-ops)."""
-        merged = self.df.unionByName(other).dropDuplicates(["subj", "pred", "obj"])
-        return TripleStore(merged)
-
     def with_df(self, df: DataFrame) -> "TripleStore":
-        """Same representation, different triples frame (EncodedTripleStore
-        overrides to carry its dictionary/constants along)."""
-        return TripleStore(df)
+        """Same representation (and, for EncodedTripleStore, the same
+        dictionary and constants), different triples frame."""
+        out = copy.copy(self)
+        out.df = df
+        return out
 
-    def persist(self, level=None) -> "TripleStore":
-        self.df = self.df.persist() if level is None else self.df.persist(level)
-        return self
-
-    def unpersist(self) -> "TripleStore":
-        self.df.unpersist()
-        return self
+    def decode(self, df: DataFrame, cols: list[str]) -> DataFrame:
+        """Term columns of ``df`` in their readable form: already strings
+        here (EncodedTripleStore maps its ids back through the dictionary)."""
+        return df
 
 
 # ---------------------------------------------------------------------------
 # J1: k-hop property-path join (searchByPathVisit, ValidatorBase.java:34-74).
 # ---------------------------------------------------------------------------
-def path_join(store: TripleStore, preds: list[str], broadcast_hops: bool = True) -> DataFrame:
+def path_join(store: TripleStore, preds: list[str]) -> DataFrame:
     """Follow ``p1/p2/.../pk`` from every subject of p1; returns (root, leaf).
 
     The reference walks the path per-subject (O(|subjects| * path) nested
     loop); this is the set-at-a-time equivalent: a chain of equi-joins.
-    ``broadcast_hops=True`` hints every hop DataFrame broadcastable — right
-    for qb metadata paths, wrong for observation-scale hops (pass False and
-    let AQE pick sort-merge/shuffled-hash).
+    Every hop after the first is hinted broadcastable: the paths followed
+    are qb metadata paths, schema-scale at any data scale.
     """
     assert preds, "empty property path"
     hop = store.p(preds[0])
     acc = hop.select(F.col("subj").alias("root"), F.col("obj").alias("leaf"))
     for pred in preds[1:]:
-        nxt = store.p(pred).select(
-            F.col("subj").alias("_s"), F.col("obj").alias("_o")
+        nxt = F.broadcast(
+            store.p(pred).select(F.col("subj").alias("_s"), F.col("obj").alias("_o"))
         )
-        if broadcast_hops:
-            nxt = F.broadcast(nxt)
         acc = (
             acc.join(nxt, acc.leaf == nxt._s, "inner")
             .select("root", F.col("_o").alias("leaf"))

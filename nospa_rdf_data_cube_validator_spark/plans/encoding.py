@@ -120,20 +120,6 @@ class EncodedTripleStore(TripleStore):
                 "arbitrary data terms must be joined through the dictionary"
             ) from None
 
-    def union(self, other: DataFrame) -> "EncodedTripleStore":
-        merged = self.df.unionByName(other).dropDuplicates(["subj", "pred", "obj"])
-        return EncodedTripleStore.__new__(EncodedTripleStore)._adopt(merged, self)
-
-    def _adopt(self, df: DataFrame, parent: "EncodedTripleStore") -> "EncodedTripleStore":
-        TripleStore.__init__(self, df)
-        self.dictionary = parent.dictionary
-        self._const = parent._const
-        return self
-
-    def with_df(self, df: DataFrame) -> "EncodedTripleStore":
-        """Same dictionary/constants, different triples frame."""
-        return EncodedTripleStore.__new__(EncodedTripleStore)._adopt(df, self)
-
     # -- output decode ----------------------------------------------------
     def decode(self, df: DataFrame, cols: list[str]) -> DataFrame:
         """Replace id columns with their term strings without ever shuffling

@@ -213,8 +213,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_SESSION_WARM", "1") != "0":
-        _warm_session(spark)
+    _warm_session(spark)
     return spark
 
 
@@ -226,8 +225,8 @@ def _warm_session(spark: SparkSession) -> None:
     The first REAL query otherwise pays this JIT tax (measured 2-4 s
     across the first queries of a fresh session). Touches no input data
     and computes no reusable results — it is the same per-session
-    constant a connection pool warms away, applied to the JVM. Disable
-    with SPARK_GRAFT_SESSION_WARM=0. Idempotent per session."""
+    constant a connection pool warms away, applied to the JVM. Idempotent
+    per session."""
     if getattr(spark, "_nospa_warmed", False):
         return
     try:

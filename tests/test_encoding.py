@@ -113,20 +113,56 @@ def test_encoded_ic12_representative_choice_matches(spark):
     assert s == e and len(s) > 0
 
 
+def _cached_plans(spark) -> list[str]:
+    """The analyzed plans of the DataFrames the session's cache manager holds."""
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return sorted(cached.apply(i).plan().toString() for i in range(cached.size()))
+
+
+def test_validate_store_decodes_encoded_report(spark, tmp_path):
+    """validate_store over an encoded store writes IRIs, not term ids: the
+    committed ic12 table holds the same obs IRIs as the string store's, and
+    the validator's caches are released by the time it returns."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from nospa_rdf_data_cube_validator_spark.pipeline import validate_store
+
+    raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + fx.mut_ic12()))
+    s_norm = normalize(raw)
+    s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
+    e_norm = normalize(encode_store(raw, parts=4))
+    e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
+    want = {r["obs"] for r in CubeValidator(s_norm).ic12().collect()}
+
+    before = _cached_plans(spark)
+    _, counts = validate_store(e_norm, str(tmp_path / "report"))
+    assert _cached_plans(spark) == before
+
+    table = pq.read_table(os.path.join(tmp_path, "report", "violations", "ic12"))
+    assert table.schema.field("obs").type == "string"
+    got = table.column("obs").to_pylist()
+    assert counts["ic12"] == len(got) == len(want) > 0
+    assert set(got) == want
+
+
 def test_pipeline_encoded_snapshots_and_resume(spark, tmp_path):
     """encoded=True adds term_dict + triples_encoded snapshots; validation
     over ids yields zero violations on the constructed cube; a second run
     resumes from the encoded snapshots (manifest short-circuit)."""
     import os
 
-    from nospa_rdf_data_cube_validator_spark.pipeline import run_pipeline
+    from nospa_rdf_data_cube_validator_spark.pipeline import run_pipeline, validate_store
     from nospa_rdf_data_cube_validator_spark.sources.transcripts import synth_transcripts
 
     wd = str(tmp_path / "enc_wd")
     tr = synth_transcripts(spark, n_convs=15, base_turns=5, hot_convs=1, hot_turns=30)
     res = run_pipeline(spark, tr, wd, validate=True, encoded=True)
-    for name, df in res["violations"].items():
-        assert df.count() == 0, name
+    _, counts = validate_store(res["store"], str(tmp_path / "report"))
+    assert len(counts) == 21
+    for name, n in counts.items():
+        assert n == 0, name
     assert res["triples_encoded"].schema["subj"].dataType.typeName() == "long"
     assert os.path.exists(os.path.join(wd, "term_dict"))
     # the decoded edge count matches the string triples snapshot
@@ -145,22 +181,23 @@ def test_pipeline_encoded_snapshots_and_resume(spark, tmp_path):
 
 
 def test_pipeline_bucketed_encoded_atrest(spark, tmp_path):
-    """bucketed=True + encoded=True: the validate store IS the subj-bucketed
+    """validate=True + encoded=True: the validate store IS the subj-bucketed
     cube_atrest table — per-observation (subj, pred) aggregations plan with
     NO Exchange, violations still all-zero (plan property + correctness),
     and a re-run resumes the table from the session catalog."""
     import json
     import os
 
-    from nospa_rdf_data_cube_validator_spark.pipeline import run_pipeline
+    from nospa_rdf_data_cube_validator_spark.pipeline import run_pipeline, validate_store
     from nospa_rdf_data_cube_validator_spark.sources.transcripts import synth_transcripts
 
     wd = str(tmp_path / "bkt_wd")
     tr = synth_transcripts(spark, n_convs=15, base_turns=5, hot_convs=1, hot_turns=30)
-    res = run_pipeline(spark, tr, wd, validate=True, encoded=True, bucketed=True, buckets=4)
-    for name, df in res["violations"].items():
-        assert df.count() == 0, name
-    res["validator"].unpersist()
+    res = run_pipeline(spark, tr, wd, validate=True, encoded=True, buckets=4)
+    _, counts = validate_store(res["store"], str(tmp_path / "report"))
+    assert len(counts) == 21
+    for name, n in counts.items():
+        assert n == 0, name
     store_df = res["store"].df
     assert store_df.schema["subj"].dataType.typeName() == "long"
     plan = store_df.groupBy("subj", "pred").count()._jdf.queryExecution().executedPlan().toString()
@@ -173,6 +210,5 @@ def test_pipeline_bucketed_encoded_atrest(spark, tmp_path):
     assert lineage.agg(F.sum("row_count")).collect()[0][0] == rows == store_df.count()
     # same-session resume: the manifest (incl. recorded seconds) is untouched
     before = open(os.path.join(wd, "_MANIFEST.json")).read()
-    res2 = run_pipeline(spark, tr, wd, validate=True, encoded=True, bucketed=True, buckets=4)
-    res2["validator"].unpersist()
+    res2 = run_pipeline(spark, tr, wd, validate=True, encoded=True, buckets=4)
     assert open(os.path.join(wd, "_MANIFEST.json")).read() == before

@@ -16,7 +16,7 @@ from nospa_rdf_data_cube_validator_spark.functions.linking import (
     resolve_aliases,
     surface_dict,
 )
-from nospa_rdf_data_cube_validator_spark.pipeline import StageRunner, run_pipeline
+from nospa_rdf_data_cube_validator_spark.pipeline import StageRunner, run_pipeline, validate_store
 from nospa_rdf_data_cube_validator_spark.sources.rdf import (
     read_ntriples,
     read_turtle,
@@ -93,8 +93,10 @@ def test_pipeline_end_to_end_and_resume(spark, transcripts, tmp_path):
     wd = str(tmp_path / "wd")
     res = run_pipeline(spark, transcripts, wd, validate=True)
     assert res["triples"].count() > 0
-    for name, df in res["violations"].items():
-        assert df.count() == 0, f"{name} violated on constructed cube"
+    _, counts = validate_store(res["store"], str(tmp_path / "report"))
+    assert len(counts) == 21
+    for name, n in counts.items():
+        assert n == 0, f"{name} violated on constructed cube"
     # manifest written, lineage rows exist
     assert os.path.exists(os.path.join(wd, "_MANIFEST.json"))
     lineage = spark.read.parquet(os.path.join(wd, "_lineage_mentions"))
