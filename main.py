@@ -20,6 +20,7 @@ Build the zip with: python tools/package.py -> dist/engine.zip
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
@@ -43,7 +44,9 @@ def cmd_pipeline(spark, args) -> int:
     transcripts = read_transcripts(spark, args.input)
     result = run_pipeline(spark, transcripts, args.workdir, validate=True, encoded=args.encoded)
     validate_store(result["store"], args.report or args.workdir)
-    print(f"triples: {result['triples'].count()}")
+    # the stage commit recorded the row count from the parquet footers
+    with open(os.path.join(args.workdir, "_MANIFEST.json")) as fh:
+        print(f"triples: {json.load(fh)['stages']['triples']['rows']}")
     return 0
 
 

@@ -8,9 +8,14 @@ triple is a no-op); here every rule is a projection/join producing new
 triple rows, unioned and deduplicated — INSERT-only and idempotent, as
 required by SURVEY.md §7.0.
 
-Scale shape: every derived-triple join is (huge observation-side) x
-(tiny schema-side); the schema sides are explicitly broadcast so phase 2
-adds no shuffle over the observation table beyond the final dedup.
+Scale shape: the schema sides come from the driver-held schema slice
+(plans/schema.py), one capped filter+collect per phase; N2 is derived
+from it entirely in Python, and the N3-N5 (ds, component) sides become
+local relations, so a cube without dataset- or slice-attached components
+folds those push-downs away at plan time. Only the observation-scale
+rules run as Spark plans: N1's type closure and the N3-N5 joins against
+the qb:dataSet, qb:slice and qb:observation edges. Phase 1's output is
+materialized (localCheckpoint) before phase 2 reads it.
 """
 
 from __future__ import annotations
@@ -19,7 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import qb, terms
-from ..plans.algebra import TripleStore, path_join, star_fetch
+from ..plans.algebra import TripleStore
+from ..plans.schema import SchemaSlice
+from ..session import local_frame
 
 
 def _type_rows(store: TripleStore, subjects: DataFrame, rdf_class: str) -> DataFrame:
@@ -50,54 +57,51 @@ def _obj_as_subj(store: TripleStore, pred: str) -> DataFrame:
     )
 
 
-def normalize_phase1(store: TripleStore) -> TripleStore:
-    """N1 (type closure) + N2 (property closure), Normalizer.java:26-71.
-
-    Branch scans hit the (checkpointed/cached) store directly — in-memory
-    rescans are cheaper than materializing a filtered cache.
-
-    Returns the store unioned with the derived triples WITHOUT the set-dedup
-    shuffle (a multiset): normalize() pays for one full-output dedup total
-    instead of one per phase."""
-    rel = store.df
-    rel_store = store
-    new_parts: list[DataFrame] = []
-
-    # N1a: ?slice qb:observation ?o  =>  ?o a qb:Observation
-    new_parts.append(
-        _type_rows(store, _obj_as_subj(rel_store, qb.QB_OBSERVATION_PROP), qb.QB_OBSERVATION)
-    )
-
-    # N1b: ?o qb:dataSet ?ds  =>  ?o a qb:Observation ; ?ds a qb:DataSet
-    ds_edges = rel.where(F.col("pred") == store.lit(qb.QB_DATASET_PROP))
-    new_parts.append(_type_rows(store, ds_edges.select("subj").distinct(), qb.QB_OBSERVATION))
-    new_parts.append(
-        _type_rows(store, _obj_as_subj(rel_store, qb.QB_DATASET_PROP), qb.QB_DATASET)
-    )
-
-    # N1c: ?ds qb:slice ?s  =>  ?s a qb:Slice
-    new_parts.append(_type_rows(store, _obj_as_subj(rel_store, qb.QB_SLICE_PROP), qb.QB_SLICE))
-
-    # N2: ?spec qb:dimension|measure|attribute ?p  =>
-    #     ?p a qb:{Dimension,Measure,Attribute}Property ;
-    #     ?spec qb:componentProperty ?p
+def _n2_rows(store: TripleStore) -> set:
+    """N2 (Normalizer.java:54-71) from the driver-held schema slice:
+    ?spec qb:dimension|measure|attribute ?p  =>
+    ?p a qb:{Dimension,Measure,Attribute}Property (resource ?p only) ;
+    ?spec qb:componentProperty ?p (the edge's object columns kept)."""
+    schema = SchemaSlice(store)
+    tv = store.term_value
+    rdf_type, comp_prop = tv(qb.RDF_TYPE), tv(qb.QB_COMPONENT_PROPERTY)
+    out = set()
     for comp_pred, comp_class in (
         (qb.QB_DIMENSION, qb.QB_DIMENSION_PROPERTY),
         (qb.QB_MEASURE, qb.QB_MEASURE_PROPERTY),
         (qb.QB_ATTRIBUTE, qb.QB_ATTRIBUTE_PROPERTY),
     ):
-        edges = rel.where(F.col("pred") == store.lit(comp_pred))
-        new_parts.append(_type_rows(store, _obj_as_subj(rel_store, comp_pred), comp_class))
-        new_parts.append(
-            edges.select(
-                "subj",
-                store.lit(qb.QB_COMPONENT_PROPERTY).alias("pred"),
-                "obj",
-                "obj_kind",
-                "obj_datatype",
-                "obj_lang",
-            )
-        )
+        for r in schema.edges(comp_pred):
+            if r.obj_kind != terms.KIND_LITERAL:
+                out.add((r.obj, rdf_type, tv(comp_class), terms.KIND_IRI, None, None))
+            out.add((r.subj, comp_prop, r.obj, r.obj_kind, r.obj_datatype, r.obj_lang))
+    return out
+
+
+def normalize_phase1(store: TripleStore) -> TripleStore:
+    """N1 (type closure) + N2 (property closure), Normalizer.java:26-71.
+
+    N1's branches scan the store; N2 is a local relation derived from the
+    store's schema slice (a slice over METADATA_CAP raises ValueError).
+
+    Returns the store unioned with the derived triples WITHOUT the set-dedup
+    shuffle (a multiset): normalize() pays for one full-output dedup total
+    instead of one per phase."""
+    rel = store.df
+    new_parts: list[DataFrame] = []
+
+    # N1a: ?slice qb:observation ?o  =>  ?o a qb:Observation
+    new_parts.append(
+        _type_rows(store, _obj_as_subj(store, qb.QB_OBSERVATION_PROP), qb.QB_OBSERVATION)
+    )
+
+    # N1b: ?o qb:dataSet ?ds  =>  ?o a qb:Observation ; ?ds a qb:DataSet
+    ds_edges = rel.where(F.col("pred") == store.lit(qb.QB_DATASET_PROP))
+    new_parts.append(_type_rows(store, ds_edges.select("subj").distinct(), qb.QB_OBSERVATION))
+    new_parts.append(_type_rows(store, _obj_as_subj(store, qb.QB_DATASET_PROP), qb.QB_DATASET))
+
+    # N1c: ?ds qb:slice ?s  =>  ?s a qb:Slice
+    new_parts.append(_type_rows(store, _obj_as_subj(store, qb.QB_SLICE_PROP), qb.QB_SLICE))
 
     derived = new_parts[0]
     for part in new_parts[1:]:
@@ -108,28 +112,46 @@ def normalize_phase1(store: TripleStore) -> TripleStore:
     # full-column dedup: the non-key columns are branch constants (see
     # normalize() — codegen HashAggregate instead of SortAggregate+First)
     derived = derived.dropDuplicates()
-    return store.with_df(store.df.unionByName(derived))
+    n2 = local_frame(rel.sparkSession, _n2_rows(store), rel.select(*terms.TRIPLE_COLS).schema)
+    return store.with_df(rel.unionByName(derived).unionByName(n2))
 
 
-def _ds_specs(store: TripleStore) -> DataFrame:
-    """(ds, spec) pairs: ?ds qb:structure/qb:component ?spec (Normalizer.java:91-92)."""
-    return path_join(store, [qb.QB_STRUCTURE, qb.QB_COMPONENT]).select(
-        F.col("root").alias("ds"), F.col("leaf").alias("spec")
-    )
+def _push_down_comps(store: TripleStore) -> tuple[set, set]:
+    """The (ds, comp) pairs whose values phase 2 pushes down, from the
+    driver-held schema slice (?ds qb:structure/qb:component ?spec, IRI
+    ?spec qb:componentProperty ?comp; Normalizer.java:91-92,107,142):
+
+    - onto observations (N3): specs with qb:componentAttachment qb:DataSet;
+    - from slices onto their observations: specs with
+      qb:componentAttachment qb:Slice (N4) and every comp typed
+      qb:DimensionProperty (N5). Both rules copy the slice's values of the
+      comp to the slice's observations, so one pair set serves them."""
+    schema = SchemaSlice(store)
+    tv = store.term_value
+    comps: dict = {}
+    for r in schema.edges(qb.QB_COMPONENT_PROPERTY):
+        if r.obj_kind == terms.KIND_IRI:
+            comps.setdefault(r.subj, set()).add(r.obj)
+    attached = schema.pairs(qb.QB_COMPONENT_ATTACHMENT)
+    on_ds = {spec for spec, at in attached if at == tv(qb.QB_DATASET)}
+    on_slice = {spec for spec, at in attached if at == tv(qb.QB_SLICE)}
+    dims = schema.typed(qb.QB_DIMENSION_PROPERTY)
+    ds_pairs, slice_pairs = set(), set()
+    for ds, spec in schema.ds_specs:
+        for comp in comps.get(spec, ()):
+            if spec in on_ds:
+                ds_pairs.add((ds, comp))
+            if spec in on_slice or comp in dims:
+                slice_pairs.add((ds, comp))
+    return ds_pairs, slice_pairs
 
 
-def _attached_comps(store: TripleStore, attachment: str) -> DataFrame:
-    """(spec, comp) for specs marked qb:componentAttachment <attachment>,
-    keeping only IRI-valued component properties (comp.isURIResource(),
-    Normalizer.java:107,142)."""
-    fetched = star_fetch(
-        store,
-        [(qb.QB_COMPONENT_ATTACHMENT, attachment)],
-        qb.QB_COMPONENT_PROPERTY,
-        with_kind=True,
-    )
-    return fetched.where(F.col("obj_kind") == terms.KIND_IRI).select(
-        F.col("subj").alias("spec"), F.col("obj").alias("comp")
+def _values(df: DataFrame, keys: DataFrame, key: str) -> DataFrame:
+    """(key, comp) |><| T(subj=key, pred=comp): the comp's values on each key."""
+    return (
+        F.broadcast(keys)
+        .join(df, (df["subj"] == keys[key]) & (df["pred"] == keys["comp"]), "inner")
+        .select(key, "comp", "obj", "obj_kind", "obj_datatype", "obj_lang")
     )
 
 
@@ -153,85 +175,36 @@ def normalize_phase2(store: TripleStore) -> TripleStore:
         slice onto its member observations; N5: any *dimension* value
         sitting on a slice pushed to member observations.
 
-    Returns the store unioned with the derived triples, a multiset like
-    phase 1's. Safe over a multiset store: the metadata sides all carry
-    explicit distinct()s, and duplicate observation-side rows only
+    The (ds, comp) sides are local relations built from the store's
+    schema slice (see _push_down_comps); an empty one folds its push-down
+    out of the plan. Returns the store unioned with the derived triples, a
+    multiset like phase 1's: duplicate observation-side rows only
     duplicate derived rows that normalize()'s final dedup removes.
     """
     df = store.df
-    ds_specs = _ds_specs(store)
+    # terms, never null: the derived pred column keeps the store's nullability
+    cols = "ds {t} NOT NULL, comp {t} NOT NULL".format(t=store.term_sql_type)
+    ds_pairs, slice_pairs = _push_down_comps(store)
+    ds_comp = local_frame(df.sparkSession, ds_pairs, cols)
+    slice_ds_comp = local_frame(df.sparkSession, slice_pairs, cols)
 
     obs_ds = store.p(qb.QB_DATASET_PROP).select(
         F.col("subj").alias("obs"), F.col("obj").alias("ds")
     )
-    ds_slice = (
-        df.where(
-            (F.col("pred") == store.lit(qb.QB_SLICE_PROP))
-            & (F.col("obj_kind") != terms.KIND_LITERAL)
-        )
-        .select(F.col("subj").alias("ds"), F.col("obj").alias("slice"))
-    )
-    slice_obs = (
-        df.where(
-            (F.col("pred") == store.lit(qb.QB_OBSERVATION_PROP))
-            & (F.col("obj_kind") != terms.KIND_LITERAL)
-        )
-        .select(F.col("subj").alias("slice"), F.col("obj").alias("obs"))
-    )
+    ds_slice = df.where(
+        (F.col("pred") == store.lit(qb.QB_SLICE_PROP)) & (F.col("obj_kind") != terms.KIND_LITERAL)
+    ).select(F.col("subj").alias("ds"), F.col("obj").alias("slice"))
+    slice_obs = df.where(
+        (F.col("pred") == store.lit(qb.QB_OBSERVATION_PROP))
+        & (F.col("obj_kind") != terms.KIND_LITERAL)
+    ).select(F.col("subj").alias("slice"), F.col("obj").alias("obs"))
 
-    # --- N3: componentAttachment qb:DataSet -------------------------------
-    ds_comp = F.broadcast(
-        ds_specs.join(_attached_comps(store, qb.QB_DATASET), "spec").select("ds", "comp").distinct()
-    )
-    # values of the component on the dataset itself: (ds, comp) |><| T(subj=ds, pred=comp)
-    ds_vals = ds_comp.join(
-        df,
-        (df["subj"] == ds_comp["ds"]) & (df["pred"] == ds_comp["comp"]),
-        "inner",
-    ).select("ds", "comp", "obj", "obj_kind", "obj_datatype", "obj_lang")
-    n3 = _emit(obs_ds.join(F.broadcast(ds_vals), "ds"), "obs")
-
-    # --- N4: componentAttachment qb:Slice ---------------------------------
-    slice_comp = (
-        ds_specs.join(_attached_comps(store, qb.QB_SLICE), "spec")
-        .select("ds", "comp")
-        .distinct()
-        .join(ds_slice, "ds")
-        .select("slice", "comp")
-        .distinct()
-    )
-    slice_vals = F.broadcast(slice_comp).join(
-        df,
-        (df["subj"] == slice_comp["slice"]) & (df["pred"] == slice_comp["comp"]),
-        "inner",
-    ).select("slice", "comp", "obj", "obj_kind", "obj_datatype", "obj_lang")
-    n4 = _emit(slice_obs.join(F.broadcast(slice_vals), "slice"), "obs")
-
-    # --- N5: dimension values sitting on slices ---------------------------
-    dims_defined = store.typed(qb.QB_DIMENSION_PROPERTY).select(F.col("subj").alias("comp"))
-    spec_comps = (
-        store.p(qb.QB_COMPONENT_PROPERTY, with_kind=True)
-        .where(F.col("obj_kind") == terms.KIND_IRI)
-        .select(F.col("subj").alias("spec"), F.col("obj").alias("comp"))
-    )
-    dim_comp = (
-        ds_specs.join(spec_comps, "spec")
-        .select("ds", "comp")
-        .join(F.broadcast(dims_defined), "comp", "left_semi")
-        .distinct()
-        .join(ds_slice, "ds")
-        .select("slice", "comp")
-        .distinct()
-    )
-    dim_vals = F.broadcast(dim_comp).join(
-        df,
-        (df["subj"] == dim_comp["slice"]) & (df["pred"] == dim_comp["comp"]),
-        "inner",
-    ).select("slice", "comp", "obj", "obj_kind", "obj_datatype", "obj_lang")
-    n5 = _emit(slice_obs.join(F.broadcast(dim_vals), "slice"), "obs")
-
-    derived = n3.unionByName(n4).unionByName(n5)
-    return store.with_df(store.df.unionByName(derived))
+    # N3: the dataset's values of its dataset-attached components
+    n3 = _emit(obs_ds.join(F.broadcast(_values(df, ds_comp, "ds")), "ds"), "obs")
+    # N4 + N5: the slice's values of its slice-attached components and dims
+    slice_comp = slice_ds_comp.join(ds_slice, "ds").select("slice", "comp").distinct()
+    n45 = _emit(slice_obs.join(F.broadcast(_values(df, slice_comp, "slice")), "slice"), "obs")
+    return store.with_df(df.unionByName(n3).unionByName(n45))
 
 
 def normalize(store: TripleStore) -> TripleStore:
@@ -246,10 +219,9 @@ def normalize(store: TripleStore) -> TripleStore:
     projections that are themselves deduplicated).
 
     Phase 1's multiset result is materialized (localCheckpoint — a narrow
-    write, no shuffle) before phase 2, which scans the store ~8 times; an
-    unmaterialized union would re-execute the phase-1 derivation per scan
-    (with the per-phase dedup the shuffle exchange used to serve that
-    reuse role — keep the materialization when touching this)."""
+    write, no shuffle) before phase 2, which collects its schema slice and
+    scans the store for the push-down joins; an unmaterialized union would
+    re-execute the phase-1 derivation per scan."""
     p1 = normalize_phase1(store)
     p1 = p1.with_df(p1.df.localCheckpoint(eager=True))
     multiset = normalize_phase2(p1)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .. import qb, terms
 from ..plans.algebra import TripleStore, path_join, star_fetch, star_subjects
 from ..plans.closure import transitive_closure
+from ..plans.schema import SchemaSlice
 from ..session import local_frame
 
 _EMPTY_STR_ARRAY = "array()"
@@ -101,37 +102,10 @@ class CubeValidator:
     # ------------------------------------------------------------------
     # shared sub-plans (all cached; metadata ones are tiny)
     # ------------------------------------------------------------------
-    #: guard on the schema slice the validator holds on the driver: DSD/
-    #: component/code-list structures are human-authored and stay
-    #: schema-scale at any observation scale, so a store whose schema
-    #: slice exceeds this many triples is rejected (see _meta_store).
-    METADATA_CAP = 1_000_000
-
-    def _cached(self, key: str, build) -> DataFrame:
+    def _cached(self, key: str, build):
         if key not in self._memo:
             self._memo[key] = build()
         return self._memo[key]
-
-    def _local(self, df: DataFrame) -> DataFrame:
-        """Driver-materialize a METADATA-scale frame as a local relation.
-
-        The plan-derived metadata frames (measure_type_datasets,
-        _ds_measures_arr, _dim_code_lists, _hcl, _pcp_raw, _hcl_roots) are
-        each consumed by several constraint plans, and each consumption
-        re-evaluates the whole subtree inside its own broadcast job (guide
-        §2.4: remove work, not just shuffles; the reference engine likewise
-        holds schema structures in memory). Collecting once and re-creating
-        a local relation makes every downstream broadcast build free.
-        Values are unchanged, so every icN() result is identical. Every
-        frame passed here derives from the schema slice, which _meta_store
-        already caps at METADATA_CAP triples."""
-        rows = df.collect()
-        # LocalRelation, not a Python-RDD plan, for any row count: broadcasts
-        # of these frames build driver-side with no job, and an EMPTY one (a
-        # cube without qb:measureType, qb:codeList or hierarchies) lets the
-        # optimizer fold the ICs joined to it (ic15/16/19/20/21) into an
-        # empty LocalRelation before any job runs.
-        return local_frame(df.sparkSession, rows, df.schema)
 
     def _persist(self, df: DataFrame) -> DataFrame:
         """persist() with ownership: released by unpersist()/close() so
@@ -157,59 +131,27 @@ class CubeValidator:
     def __exit__(self, *exc) -> None:
         self.unpersist()
 
-    #: predicates / rdf:type classes that together define the SCHEMA slice
-    #: of the store: every memoized metadata frame below derives from
-    #: triples matching this vocabulary, so ONE filtered pass over the
-    #: store feeds them all (the per-frame builders each paid their own
-    #: full scan before — six scans of the observation-scale store per
-    #: validator at bench scale). Observation-scale predicates
-    #: (qb:dataSet, qb:measureType, qb:observation, skos:inScheme/member,
-    #: rdf:type qb:Observation / skos:Concept) are deliberately NOT here.
-    _META_PREDS = (
-        qb.QB_STRUCTURE,
-        qb.QB_COMPONENT,
-        qb.QB_COMPONENT_PROPERTY,
-        qb.QB_CODE_LIST,
-        qb.QB_PARENT_CHILD_PROPERTY,
-        qb.QB_HIERARCHY_ROOT,
-    )
-    _META_CLASSES = (
-        qb.QB_DIMENSION_PROPERTY,
-        qb.QB_MEASURE_PROPERTY,
-        qb.QB_ATTRIBUTE_PROPERTY,
-        qb.QB_HIERARCHICAL_CODE_LIST,
-    )
+    def _schema(self) -> SchemaSlice:
+        """The store's schema slice (plans/schema.py), collected by the
+        first IC that needs metadata. Every metadata frame below is derived
+        from its rows in Python with no further Spark job; a slice over
+        METADATA_CAP triples raises ValueError (the validator, like the
+        reference, holds the schema in memory)."""
+        return self._cached("schema", lambda: SchemaSlice(self.store))
 
-    def _meta_store(self) -> TripleStore:
-        """A store over ONLY the schema-vocabulary triples, driver-
-        materialized (one scan, one collect); all memoized metadata frames
-        build from it with zero further passes over the full store. The
-        collected rows are stashed (``meta_rows`` memo) so the metadata
-        builders below derive their frames in pure Python with ZERO Spark
-        jobs. A schema slice over METADATA_CAP triples raises ValueError:
-        the validator, like the reference, holds the schema in memory."""
-        def build():
-            tv = self.store.term_value
-            cond = F.col("pred").isin([tv(p) for p in self._META_PREDS]) | (
-                (F.col("pred") == self.store.lit(qb.RDF_TYPE))
-                & F.col("obj").isin([tv(c) for c in self._META_CLASSES])
-            )
-            df = self.store.df.where(cond)
-            rows = df.limit(self.METADATA_CAP + 1).collect()
-            if len(rows) > self.METADATA_CAP:
-                raise ValueError(
-                    f"schema slice exceeds METADATA_CAP={self.METADATA_CAP} triples "
-                    "(structure, component, code-list and hierarchy declarations)"
-                )
-            self._memo["meta_rows"] = rows
-            return self.store.with_df(local_frame(df.sparkSession, rows, df.schema))
-
-        return self._cached("meta_store", build)
-
-    def _meta_rows(self) -> list:
-        """The collected schema-triple rows (see _meta_store)."""
-        self._meta_store()
-        return self._memo["meta_rows"]
+    def _frame(self, key: str, rows, schema: str) -> DataFrame:
+        """Memoized local relation of the driver rows ``rows()``; ``{t}`` in
+        the DDL ``schema`` is the store's term type. An empty one (e.g. no
+        qb:measureType, qb:codeList or hierarchy in the cube) lets the
+        optimizer fold every IC joined to it into an empty LocalRelation
+        before any job runs. Columns copied from store terms are declared
+        NOT NULL, as the store's own term columns are."""
+        return self._cached(
+            key,
+            lambda: local_frame(
+                self._spark(), rows(), schema.format(t=self.store.term_sql_type)
+            ),
+        )
 
     def obs_ds(self) -> DataFrame:
         """(obs, ds): the observation-scale qb:dataSet edge table."""
@@ -226,75 +168,30 @@ class CubeValidator:
     def ds_list(self) -> DataFrame:
         """Datasets = subjects of qb:structure (the reference's iteration
         domain for per-dataset checks, e.g. ValidatorIC11_12.java:30-41)."""
-        def build():
-            tv = self.store.term_value(qb.QB_STRUCTURE)
-            vals = sorted({r.subj for r in self._meta_rows() if r.pred == tv})
-            self._memo["ds_list_vals"] = vals
-            return local_frame(
-                self._spark(), [(v,) for v in vals], f"ds {self.store.term_sql_type}"
-            )
-
-        return self._cached("ds_list", build)
+        return self._frame("ds_list", lambda: [(v,) for v in self._schema().ds_list], "ds {t}")
 
     def ds_comp_props(self) -> DataFrame:
-        """(ds, prop, prop_kind): ?ds qb:structure/qb:component/qb:componentProperty ?prop.
+        """(ds, prop, prop_kind): ?ds qb:structure/qb:component/qb:componentProperty ?prop."""
+        return self._frame(
+            "ds_comp_props",
+            lambda: self._schema().ds_comp_props,
+            "ds {t}, prop {t}, prop_kind string",
+        )
 
-        Pure-Python derivation from the driver-held schema triples
-        (_meta_rows), zero Spark jobs: the structure/component/
-        componentProperty hops, distinct, sorted deterministically."""
-        def build():
-            rows = self._meta_rows()
-            tv = self.store.term_value
-            t_struct, t_comp, t_cp = (
-                tv(qb.QB_STRUCTURE),
-                tv(qb.QB_COMPONENT),
-                tv(qb.QB_COMPONENT_PROPERTY),
-            )
-            ds_dsd = [(r.subj, r.obj) for r in rows if r.pred == t_struct]
-            dsd_specs: dict = {}
-            spec_props: dict = {}
-            for r in rows:
-                if r.pred == t_comp:
-                    dsd_specs.setdefault(r.subj, []).append(r.obj)
-                elif r.pred == t_cp:
-                    spec_props.setdefault(r.subj, []).append((r.obj, r.obj_kind))
-            out = sorted({
-                (ds, prop, kind)
-                for ds, dsd in ds_dsd
-                for spec in dsd_specs.get(dsd, ())
-                for prop, kind in spec_props.get(spec, ())
-            })
-            t = self.store.term_sql_type
-            self._memo["ds_comp_props_rows"] = out
-            return local_frame(self._spark(), out, f"ds {t}, prop {t}, prop_kind string")
-
-        return self._cached("ds_comp_props", build)
-
-    def _typed_local(self, key: str, rdf_class: str) -> DataFrame:
-        """typed() subjects of the driver-held schema triples as a
-        job-free LocalRelation (column ``subj``); the sorted values are
-        stashed as ``<key>_vals``."""
-        def build():
-            t_type = self.store.term_value(qb.RDF_TYPE)
-            t_cls = self.store.term_value(rdf_class)
-            vals = sorted(
-                {r.subj for r in self._meta_rows() if r.pred == t_type and r.obj == t_cls}
-            )
-            self._memo[key + "_vals"] = vals
-            return local_frame(
-                self._spark(), [(v,) for v in vals], f"subj {self.store.term_sql_type}"
-            )
-
-        return self._cached(key, build)
+    def _typed(self, rdf_class: str) -> DataFrame:
+        """Subjects typed ``rdf_class`` in the schema slice (column ``subj``)."""
+        return self._frame(
+            rdf_class, lambda: [(v,) for v in sorted(self._schema().typed(rdf_class))], "subj {t}"
+        )
 
     def dims_defined(self) -> DataFrame:
-        return self._typed_local("dims_defined", qb.QB_DIMENSION_PROPERTY)
+        return self._typed(qb.QB_DIMENSION_PROPERTY)
 
     def measures_defined(self) -> DataFrame:
-        return self._typed_local("measures_defined", qb.QB_MEASURE_PROPERTY)
+        return self._typed(qb.QB_MEASURE_PROPERTY)
 
     def attrs_defined(self) -> DataFrame:
-        return self._typed_local("attrs_defined", qb.QB_ATTRIBUTE_PROPERTY)
+        return self._typed(qb.QB_ATTRIBUTE_PROPERTY)
 
     def _obs_pred_stats(self, preds: DataFrame) -> DataFrame:
         """(obs, pred, n_vals, min_val) over triples whose pred is in ``preds``.
@@ -443,29 +340,22 @@ class CubeValidator:
     def ds_dims_arr(self) -> DataFrame:
         """(ds, dims sorted-array): declared dims per dataset, kept even when
         empty (a structure-bearing dataset with zero dims makes every obs
-        after the first a duplicate under the reference's empty-key set).
-
-        Pure-Python derivation (zero Spark jobs) from the driver-held
-        schema triples; the memoized ``ds_dims_rows`` also feed
-        _ds_dim_pos, _tagged and ic11's wide-dataset probe."""
-        def build():
-            self.ds_comp_props(), self.dims_defined(), self.ds_list()
-            dimset = set(self._memo["dims_defined_vals"])
-            per_ds: dict = {}
-            for ds, prop, kind in self._memo["ds_comp_props_rows"]:
-                if kind == terms.KIND_IRI and prop in dimset:
-                    per_ds.setdefault(ds, set()).add(prop)
-            rows = [(ds, sorted(per_ds.get(ds, ()))) for ds in self._memo["ds_list_vals"]]
-            self._memo["ds_dims_rows"] = rows
-            t = self.store.term_sql_type
-            return local_frame(self._spark(), rows, f"ds {t}, dims array<{t}>")
-
-        return self._cached("ds_dims_arr", build)
+        after the first a duplicate under the reference's empty-key set)."""
+        return self._frame("ds_dims_arr", self._ds_dims_rows, "ds {t}, dims array<{t}>")
 
     def _ds_dims_rows(self) -> list:
-        """[(ds, sorted dims)] behind ds_dims_arr (see there)."""
-        self.ds_dims_arr()
-        return self._memo["ds_dims_rows"]
+        """[(ds, sorted dims)] behind ds_dims_arr; also read by
+        _ds_dim_pos, _tagged and ic11's wide-dataset probe."""
+        def build():
+            schema = self._schema()
+            dimset = schema.typed(qb.QB_DIMENSION_PROPERTY)
+            per_ds: dict = {}
+            for ds, prop, kind in schema.ds_comp_props:
+                if kind == terms.KIND_IRI and prop in dimset:
+                    per_ds.setdefault(ds, set()).add(prop)
+            return [(ds, sorted(per_ds.get(ds, ()))) for ds in schema.ds_list]
+
+        return self._cached("ds_dims_rows", build)
 
     def _subj_clustered(self) -> bool:
         """True when the store's scan already provides hash-clustering on
@@ -637,16 +527,15 @@ class CubeValidator:
         """Metadata frame (ds, pred, pos): each dataset's declared dims
         with their position in the sorted dims array; pos is NULL for
         datasets declaring more than 63 dims (no bitmask slot)."""
-        def build():
-            out = [
+        return self._frame(
+            "ds_dim_pos",
+            lambda: [
                 (ds, p, i if len(dims) <= 63 else None)
                 for ds, dims in self._ds_dims_rows()
                 for i, p in enumerate(dims)
-            ]
-            t = self.store.term_sql_type
-            return local_frame(self._spark(), out, f"ds {t}, pred {t}, pos int")
-
-        return self._cached("ds_dim_pos", build)
+            ],
+            "ds {t}, pred {t}, pos int",
+        )
 
     def ic11(self) -> DataFrame:
         """IC-11 All dimensions required -> (obs, dim).
@@ -775,17 +664,14 @@ class CubeValidator:
         )
         return self._missing_props(ds_attrs, "attr")
 
+    def _mt_ds_vals(self) -> set:
+        """Datasets whose component properties include qb:measureType."""
+        mt = self.store.term_value(qb.QB_MEASURE_TYPE)
+        return {ds for ds, prop, _kind in self._schema().ds_comp_props if prop == mt}
+
     def measure_type_datasets(self) -> DataFrame:
         """Datasets whose component properties include qb:measureType."""
-        return self._cached(
-            "mt_ds",
-            lambda: self._local(
-                self.ds_comp_props()
-                .where(F.col("prop") == self.store.lit(qb.QB_MEASURE_TYPE))
-                .select("ds")
-                .distinct()
-            ),
-        )
+        return self._frame("mt_ds", lambda: [(ds,) for ds in sorted(self._mt_ds_vals())], "ds {t}")
 
     def ic14(self) -> DataFrame:
         """IC-14 All measures present (ValidatorIC14.java:21-62) -> (obs, measure).
@@ -811,28 +697,16 @@ class CubeValidator:
     # ------------------------------------------------------------------
     def _ds_measures_arr(self) -> DataFrame:
         """(ds, measures sorted-array) for measureType datasets."""
-        def build():
-            meas = (
-                self.ds_comp_props()
-                .join(self.measure_type_datasets(), "ds", "left_semi")
-                .join(
-                    self.measures_defined().withColumnRenamed("subj", "prop"), "prop", "left_semi"
-                )
-                .select("ds", "prop")
-                .distinct()
-            )
-            grouped = meas.groupBy("ds").agg(F.sort_array(F.collect_set("prop")).alias("measures"))
-            return self._local(
-                self.measure_type_datasets().join(grouped, "ds", "left").withColumn(
-                    "measures",
-                    F.coalesce(
-                        "measures",
-                        F.expr(_EMPTY_STR_ARRAY).cast(f"array<{self.store.term_sql_type}>"),
-                    ),
-                )
-            )
+        def rows():
+            mt_ds = self._mt_ds_vals()
+            measures = self._schema().typed(qb.QB_MEASURE_PROPERTY)
+            per_ds: dict = {ds: set() for ds in mt_ds}
+            for ds, prop, _kind in self._schema().ds_comp_props:
+                if ds in mt_ds and prop in measures:
+                    per_ds[ds].add(prop)
+            return [(ds, sorted(props)) for ds, props in sorted(per_ds.items())]
 
-        return self._cached("ds_measures_arr", build)
+        return self._frame("ds_measures_arr", rows, "ds {t}, measures array<{t}>")
 
     def _ic15_16_base(self) -> DataFrame:
         """Per (obs in measureType cube): measureType values + measure value count
@@ -1160,14 +1034,11 @@ class CubeValidator:
     # ------------------------------------------------------------------
     def _dim_code_lists(self) -> DataFrame:
         """(dim, cl): qb:codeList values of typed DimensionProperties."""
-        return self._cached(
-            "dim_cl",
-            lambda: self._local(
-                star_fetch(
-                    self._meta_store(), [(qb.RDF_TYPE, qb.QB_DIMENSION_PROPERTY)], qb.QB_CODE_LIST
-                ).select(F.col("subj").alias("dim"), F.col("obj").alias("cl"))
-            ),
-        )
+        def rows():
+            dims = self._schema().typed(qb.QB_DIMENSION_PROPERTY)
+            return sorted(p for p in self._schema().pairs(qb.QB_CODE_LIST) if p[0] in dims)
+
+        return self._frame("dim_cl", rows, "dim {t} NOT NULL, cl {t} NOT NULL")
 
     def _ds_code_dims(self, dim_cl: DataFrame) -> DataFrame:
         """(ds, dim): code-listed declared dimensions per dataset."""
@@ -1315,39 +1186,30 @@ class CubeValidator:
     def _hcl(self) -> DataFrame:
         """(cl): subjects typed qb:HierarchicalCodeList — shared by every
         IC-20/21 sub-plan (memoized like the other metadata frames)."""
-        return self._cached(
-            "hcl",
-            lambda: self._local(
-                self._meta_store()
-                .typed(qb.QB_HIERARCHICAL_CODE_LIST)
-                .select(F.col("subj").alias("cl"))
-            ),
-        )
+        def rows():
+            return [(cl,) for cl in sorted(self._schema().typed(qb.QB_HIERARCHICAL_CODE_LIST))]
+
+        return self._frame("hcl", rows, "cl {t} NOT NULL")
 
     def _pcp_raw(self) -> DataFrame:
         """(cl, p, obj_kind): parentChildProperty declarations on typed
         hierarchical code lists, before the direct/inverse kind split."""
-        return self._cached(
-            "pcp_raw",
-            lambda: self._local(
-                self._meta_store()
-                .p(qb.QB_PARENT_CHILD_PROPERTY, with_kind=True)
-                .select(F.col("subj").alias("cl"), F.col("obj").alias("p"), "obj_kind")
-                .join(self._hcl(), "cl", "left_semi")
-            ),
+        def rows():
+            hcl = self._schema().typed(qb.QB_HIERARCHICAL_CODE_LIST)
+            pcp = self._schema().edges(qb.QB_PARENT_CHILD_PROPERTY)
+            return sorted({(r.subj, r.obj, r.obj_kind) for r in pcp if r.subj in hcl})
+
+        return self._frame(
+            "pcp_raw", rows, "cl {t} NOT NULL, p {t} NOT NULL, obj_kind string NOT NULL"
         )
 
     def _hcl_roots(self) -> DataFrame:
         """(cl, node): qb:hierarchyRoot declarations on typed lists."""
-        return self._cached(
-            "hcl_roots",
-            lambda: self._local(
-                self._meta_store()
-                .p(qb.QB_HIERARCHY_ROOT)
-                .select(F.col("subj").alias("cl"), F.col("obj").alias("node"))
-                .join(self._hcl(), "cl", "left_semi")
-            ),
-        )
+        def rows():
+            hcl = self._schema().typed(qb.QB_HIERARCHICAL_CODE_LIST)
+            return sorted(p for p in self._schema().pairs(qb.QB_HIERARCHY_ROOT) if p[0] in hcl)
+
+        return self._frame("hcl_roots", rows, "cl {t} NOT NULL, node {t} NOT NULL")
 
     def _hierarchy_conn(self, direction: str) -> DataFrame:
         """(cl, node) reachable-from-root sets per hierarchical code list.

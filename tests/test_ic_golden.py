@@ -8,8 +8,10 @@ from nospa_rdf_data_cube_validator_spark import qb, terms
 from nospa_rdf_data_cube_validator_spark.operators.normalize import (
     normalize,
     normalize_phase1,
+    normalize_phase2,
 )
 from nospa_rdf_data_cube_validator_spark.operators.validate import CubeValidator
+from nospa_rdf_data_cube_validator_spark.plans import schema
 from nospa_rdf_data_cube_validator_spark.plans.algebra import TripleStore
 
 from . import fixtures as fx
@@ -94,7 +96,27 @@ def test_validate_all_job_count(golden_store, spark_jobs):
 def test_schema_slice_over_cap_is_rejected(golden_store, monkeypatch):
     """The schema slice is held on the driver; one larger than
     METADATA_CAP triples is rejected instead of validated some other way."""
-    v = CubeValidator(golden_store)
-    monkeypatch.setattr(v, "METADATA_CAP", 5)
+    monkeypatch.setattr(schema, "METADATA_CAP", 5)
     with pytest.raises(ValueError, match="METADATA_CAP"):
-        v.validate_all()
+        CubeValidator(golden_store).validate_all()
+
+
+def test_normalize_rejects_schema_slice_over_cap(spark, monkeypatch):
+    """normalize derives N2 and its push-down sides from the same capped
+    driver-held slice, so an over-cap schema is rejected there too."""
+    monkeypatch.setattr(schema, "METADATA_CAP", 5)
+    with pytest.raises(ValueError, match="METADATA_CAP"):
+        normalize(TripleStore(terms.triples_df(spark, fx.golden_rows())))
+
+
+def test_unattached_push_downs_plan_away(spark):
+    """Without qb:componentAttachment (the benchmark cube's shape) the N3
+    and N4 (ds, comp) sides are empty: phase 2 optimizes to the phase-1
+    store plus the one slice push-down arm, which N4 shares with N5 and
+    which here carries only N5's dimension pairs."""
+    rows = [r for r in fx.golden_rows() if r[1] != qb.QB_COMPONENT_ATTACHMENT]
+    p1 = normalize_phase1(TripleStore(terms.triples_df(spark, rows)))
+    p1 = p1.with_df(p1.df.localCheckpoint(eager=True))
+    plan = normalize_phase2(p1).df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "Union"
+    assert plan.children().size() == 2
