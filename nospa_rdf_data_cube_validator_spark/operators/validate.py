@@ -16,7 +16,9 @@ reference are deliberate and documented per-method:
   deterministic reading.
 
 Scale shape (100 TB target): everything schema-level (DSDs, components,
-code lists, hierarchies) is tiny and explicitly broadcast; the only
+slice keys, code lists, hierarchies) is tiny and collected to the driver
+once (plans/schema.py): IC-2..IC-8 are computed there in full, and the
+other ICs join its Python-derived local relations as broadcasts; the only
 observation-scale shuffles are the per-observation aggregations feeding
 IC-1/11/12/13/14/15/16/17, each a single groupBy/window keyed by
 observation or (dataset, dim-key).
@@ -26,9 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import qb, terms
-from ..plans.algebra import TripleStore, path_join, star_fetch, star_subjects
+from ..plans.algebra import TripleStore, path_join
 from ..plans.closure import transitive_closure
 from ..plans.schema import SchemaSlice
 from ..session import local_frame
@@ -139,19 +142,25 @@ class CubeValidator:
         reference, holds the schema in memory)."""
         return self._cached("schema", lambda: SchemaSlice(self.store))
 
-    def _frame(self, key: str, rows, schema: str) -> DataFrame:
+    def _frame(self, key: str, rows, schema) -> DataFrame:
         """Memoized local relation of the driver rows ``rows()``; ``{t}`` in
-        the DDL ``schema`` is the store's term type. An empty one (e.g. no
-        qb:measureType, qb:codeList or hierarchy in the cube) lets the
-        optimizer fold every IC joined to it into an empty LocalRelation
-        before any job runs. Columns copied from store terms are declared
-        NOT NULL, as the store's own term columns are."""
+        a DDL ``schema`` is the store's term type (a StructType is taken as
+        is). An empty one (e.g. no qb:measureType, qb:codeList or hierarchy
+        in the cube) lets the optimizer fold every IC joined to it into an
+        empty LocalRelation before any job runs. Columns copied from store
+        terms are declared NOT NULL, as the store's own term columns are."""
         return self._cached(
             key,
             lambda: local_frame(
-                self._spark(), rows(), schema.format(t=self.store.term_sql_type)
+                self._spark(),
+                rows(),
+                schema.format(t=self.store.term_sql_type) if isinstance(schema, str) else schema,
             ),
         )
+
+    def _column(self, key: str, ddl: str, values) -> DataFrame:
+        """Memoized one-column ``_frame`` of the sorted terms ``values()``."""
+        return self._frame(key, lambda: [(v,) for v in sorted(values())], ddl)
 
     def obs_ds(self) -> DataFrame:
         """(obs, ds): the observation-scale qb:dataSet edge table."""
@@ -168,7 +177,7 @@ class CubeValidator:
     def ds_list(self) -> DataFrame:
         """Datasets = subjects of qb:structure (the reference's iteration
         domain for per-dataset checks, e.g. ValidatorIC11_12.java:30-41)."""
-        return self._frame("ds_list", lambda: [(v,) for v in self._schema().ds_list], "ds {t}")
+        return self._column("ds_list", "ds {t}", lambda: self._schema().ds_list)
 
     def ds_comp_props(self) -> DataFrame:
         """(ds, prop, prop_kind): ?ds qb:structure/qb:component/qb:componentProperty ?prop."""
@@ -180,9 +189,7 @@ class CubeValidator:
 
     def _typed(self, rdf_class: str) -> DataFrame:
         """Subjects typed ``rdf_class`` in the schema slice (column ``subj``)."""
-        return self._frame(
-            rdf_class, lambda: [(v,) for v in sorted(self._schema().typed(rdf_class))], "subj {t}"
-        )
+        return self._column(rdf_class, "subj {t}", lambda: self._schema().typed(rdf_class))
 
     def dims_defined(self) -> DataFrame:
         return self._typed(qb.QB_DIMENSION_PROPERTY)
@@ -229,38 +236,49 @@ class CubeValidator:
         obs = self.store.typed(qb.QB_OBSERVATION)
         return self._count_check(obs, self._hop2(qb.QB_DATASET_PROP), "obs", "datasets")
 
+    # IC-2..IC-8 read only schema vocabulary: each is set algebra over the
+    # driver-held slice, a local relation with no job of its own
     def ic2(self) -> DataFrame:
-        """IC-2 Unique DSD (ValidatorIC2.java:24-36) -> (ds, dsds, n_dsds)."""
-        ds = self.store.typed(qb.QB_DATASET)
-        return self._count_check(ds, self._hop2(qb.QB_STRUCTURE), "ds", "dsds")
+        """IC-2 Unique DSD (ValidatorIC2.java:24-36) -> (ds, n_dsds, dsds)."""
+        def rows():
+            schema = self._schema()
+            dsds: dict = {}  # every qb:structure edge counts, as in IC-1/IC-9
+            for r in schema.edges(qb.QB_STRUCTURE):
+                dsds.setdefault(r.subj, []).append(r.obj)
+            found = ((ds, dsds.get(ds, [])) for ds in sorted(schema.typed(qb.QB_DATASET)))
+            return [(ds, len(objs), sorted(set(objs))) for ds, objs in found if len(objs) != 1]
+
+        t = T.DataType.fromDDL(self.store.term_sql_type)
+        cols = T.StructType().add("ds", t, False).add("n_dsds", T.LongType())
+        return self._frame("ic2", rows, cols.add("dsds", T.ArrayType(t, False), False))
 
     def ic3(self) -> DataFrame:
         """IC-3 DSD includes measure (ValidatorIC3.java:25-39) -> (dsd)."""
-        dsds = self.store.typed(qb.QB_DSD).select(F.col("subj").alias("dsd"))
-        dsd_props = path_join(self.store, [qb.QB_COMPONENT, qb.QB_COMPONENT_PROPERTY])
-        with_measure = (
-            dsd_props.join(
-                self.measures_defined().withColumnRenamed("subj", "leaf"), "leaf", "left_semi"
-            )
-            .select(F.col("root").alias("dsd"))
-            .distinct()
-        )
-        return dsds.join(with_measure, "dsd", "left_anti")
+        def dsds():
+            schema = self._schema()
+            measures = schema.typed(qb.QB_MEASURE_PROPERTY)
+            props = schema.dsd_props
+            return {d for d in schema.typed(qb.QB_DSD) if not props.get(d, set()) & measures}
+
+        return self._column("ic3", "dsd {t} NOT NULL", dsds)
 
     def ic4(self) -> DataFrame:
         """IC-4 Dimensions have range (ValidatorIC4.java:22-30) -> (dim)."""
-        dims = self.dims_defined().select(F.col("subj").alias("dim"))
-        with_range = self.store.subjects_with(qb.RDFS_RANGE).select(F.col("subj").alias("dim"))
-        return dims.join(with_range, "dim", "left_anti")
+        def dims():
+            schema = self._schema()
+            return schema.typed(qb.QB_DIMENSION_PROPERTY) - schema.objects(qb.RDFS_RANGE).keys()
+
+        return self._column("ic4", "dim {t}", dims)
 
     def ic5(self) -> DataFrame:
         """IC-5 Concept dimensions have code lists (ValidatorIC5.java:23-34) -> (dim)."""
-        concept_dims = star_subjects(
-            self.store,
-            [(qb.RDF_TYPE, qb.QB_DIMENSION_PROPERTY), (qb.RDFS_RANGE, qb.SKOS_CONCEPT)],
-        ).select(F.col("subj").alias("dim"))
-        with_cl = self.store.subjects_with(qb.QB_CODE_LIST).select(F.col("subj").alias("dim"))
-        return concept_dims.join(with_cl, "dim", "left_anti")
+        def dims():
+            schema = self._schema()
+            concept = schema.typed(qb.QB_DIMENSION_PROPERTY)
+            concept &= schema.subjects(qb.RDFS_RANGE, qb.SKOS_CONCEPT)
+            return concept - schema.objects(qb.QB_CODE_LIST).keys()
+
+        return self._column("ic5", "dim {t} NOT NULL", dims)
 
     def ic6(self) -> DataFrame:
         """IC-6 Only attributes may be optional (ValidatorIC6.java:21-38) -> (comp_prop).
@@ -269,28 +287,25 @@ class CubeValidator:
         qb:component edge are checked (ValidatorIC6.java:27-28);
         strict_w3c=True checks every spec carrying componentRequired false,
         matching the official SPARQL IC-6 (no qb:component guard)."""
-        optional = star_fetch(
-            self.store, [(qb.QB_COMPONENT_REQUIRED, terms.FALSE)], qb.QB_COMPONENT_PROPERTY
-        ).select(F.col("subj").alias("spec"), F.col("obj").alias("comp_prop"))
-        if self.strict_w3c:
-            props = optional.select("comp_prop").distinct()
-        else:
-            referenced = self.store.objects_of(qb.QB_COMPONENT).select(F.col("obj").alias("spec"))
-            props = optional.join(referenced, "spec", "left_semi").select("comp_prop").distinct()
-        return props.join(
-            self.attrs_defined().withColumnRenamed("subj", "comp_prop"), "comp_prop", "left_anti"
-        )
+        def props():
+            schema = self._schema()
+            optional = schema.subjects(qb.QB_COMPONENT_REQUIRED, terms.FALSE)
+            if not self.strict_w3c:
+                optional &= {spec for _dsd, spec in schema.pairs(qb.QB_COMPONENT)}
+            found = {p for spec, p in schema.pairs(qb.QB_COMPONENT_PROPERTY) if spec in optional}
+            return found - schema.typed(qb.QB_ATTRIBUTE_PROPERTY)
+
+        return self._column("ic6", "comp_prop {t} NOT NULL", props)
 
     def ic7(self) -> DataFrame:
         """IC-7 Slice keys must be declared (ValidatorIC7.java:23-34) -> (slice_key)."""
-        keys = self.store.typed(qb.QB_SLICE_KEY).select(F.col("subj").alias("slice_key"))
-        attached = (
-            self.store.typed(qb.QB_DSD)
-            .join(self.store.p(qb.QB_SLICE_KEY_PROP), "subj", "inner")
-            .select(F.col("obj").alias("slice_key"))
-            .distinct()
-        )
-        return keys.join(attached, "slice_key", "left_anti")
+        def keys():
+            schema = self._schema()
+            dsds = schema.typed(qb.QB_DSD)
+            attached = {sk for dsd, sk in schema.pairs(qb.QB_SLICE_KEY_PROP) if dsd in dsds}
+            return schema.typed(qb.QB_SLICE_KEY) - attached
+
+        return self._column("ic7", "slice_key {t} NOT NULL", keys)
 
     def ic8(self) -> DataFrame:
         """IC-8 Slice keys consistent with DSD (ValidatorIC8.java:24-47) -> (comp_prop).
@@ -299,21 +314,19 @@ class CubeValidator:
         slice-key props across DSDs without reset, which is
         iteration-order-nondeterministic with >1 DSD; we pair (dsd, prop)
         per the official SPARQL IC-8."""
-        dsd_sk = self.store.p(qb.QB_SLICE_KEY_PROP).select(
-            F.col("subj").alias("dsd"), F.col("obj").alias("slice_key")
-        )
-        sk_props = star_fetch(
-            self.store, [(qb.RDF_TYPE, qb.QB_SLICE_KEY)], qb.QB_COMPONENT_PROPERTY
-        ).select(F.col("subj").alias("slice_key"), F.col("obj").alias("comp_prop"))
-        pairs = dsd_sk.join(sk_props, "slice_key").select("dsd", "comp_prop").distinct()
-        declared = path_join(self.store, [qb.QB_COMPONENT, qb.QB_COMPONENT_PROPERTY]).select(
-            F.col("root").alias("dsd"), F.col("leaf").alias("comp_prop")
-        )
-        return (
-            pairs.join(declared, ["dsd", "comp_prop"], "left_anti")
-            .select("comp_prop")
-            .distinct()
-        )
+        def props():
+            schema = self._schema()
+            keys = schema.typed(qb.QB_SLICE_KEY)
+            key_props = schema.objects(qb.QB_COMPONENT_PROPERTY)
+            return {
+                p
+                for dsd, sk in schema.pairs(qb.QB_SLICE_KEY_PROP)
+                if sk in keys
+                for p in key_props.get(sk, ())
+                if p not in schema.dsd_props.get(dsd, ())
+            }
+
+        return self._column("ic8", "comp_prop {t} NOT NULL", props)
 
     def ic9(self) -> DataFrame:
         """IC-9 Unique slice structure (ValidatorIC9.java:23-34) -> (slice, structures, n_structures)."""
@@ -645,23 +658,16 @@ class CubeValidator:
 
     def ic13(self) -> DataFrame:
         """IC-13 Required attributes (ValidatorIC13.java:20-66) -> (obs, attr)."""
-        ds_spec = path_join(self.store, [qb.QB_STRUCTURE, qb.QB_COMPONENT]).select(
-            F.col("root").alias("ds"), F.col("leaf").alias("spec")
-        )
-        req_specs = self.store.subjects_with(qb.QB_COMPONENT_REQUIRED, terms.TRUE).select(
-            F.col("subj").alias("spec")
-        )
-        spec_props = (
-            self.store.p(qb.QB_COMPONENT_PROPERTY, with_kind=True)
-            .where(F.col("obj_kind") == terms.KIND_IRI)
-            .select(F.col("subj").alias("spec"), F.col("obj").alias("prop"))
-        )
-        ds_attrs = (
-            ds_spec.join(req_specs, "spec", "left_semi")
-            .join(F.broadcast(spec_props), "spec")
-            .select("ds", "prop")
-            .distinct()
-        )
+        def rows():
+            schema = self._schema()
+            required = schema.subjects(qb.QB_COMPONENT_REQUIRED, terms.TRUE)
+            props: dict = {}
+            for r in schema.edges(qb.QB_COMPONENT_PROPERTY):
+                if r.obj_kind == terms.KIND_IRI and r.subj in required:
+                    props.setdefault(r.subj, set()).add(r.obj)
+            return sorted({(ds, p) for ds, spec in schema.ds_specs for p in props.get(spec, ())})
+
+        ds_attrs = self._frame("ds_required_attrs", rows, "ds {t} NOT NULL, prop {t} NOT NULL")
         return self._missing_props(ds_attrs, "attr")
 
     def _mt_ds_vals(self) -> set:
@@ -671,7 +677,7 @@ class CubeValidator:
 
     def measure_type_datasets(self) -> DataFrame:
         """Datasets whose component properties include qb:measureType."""
-        return self._frame("mt_ds", lambda: [(ds,) for ds in sorted(self._mt_ds_vals())], "ds {t}")
+        return self._column("mt_ds", "ds {t}", self._mt_ds_vals)
 
     def ic14(self) -> DataFrame:
         """IC-14 All measures present (ValidatorIC14.java:21-62) -> (obs, measure).
@@ -1186,10 +1192,9 @@ class CubeValidator:
     def _hcl(self) -> DataFrame:
         """(cl): subjects typed qb:HierarchicalCodeList — shared by every
         IC-20/21 sub-plan (memoized like the other metadata frames)."""
-        def rows():
-            return [(cl,) for cl in sorted(self._schema().typed(qb.QB_HIERARCHICAL_CODE_LIST))]
-
-        return self._frame("hcl", rows, "cl {t} NOT NULL")
+        return self._column(
+            "hcl", "cl {t} NOT NULL", lambda: self._schema().typed(qb.QB_HIERARCHICAL_CODE_LIST)
+        )
 
     def _pcp_raw(self) -> DataFrame:
         """(cl, p, obj_kind): parentChildProperty declarations on typed

@@ -1,7 +1,2 @@
-from .algebra import (  # noqa: F401
-    TripleStore,
-    path_join,
-    star_subjects,
-    star_fetch,
-)
+from .algebra import TripleStore, path_join  # noqa: F401
 from .closure import transitive_closure, reachable_pairs  # noqa: F401

@@ -25,7 +25,7 @@ import copy
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import qb, terms
+from .. import qb
 
 
 class TripleStore:
@@ -64,10 +64,6 @@ class TripleStore:
             cond = cond & (F.col("obj") == self.lit(obj))
         return self.df.where(cond).select("subj").distinct()
 
-    # -- P4: sigma(pred) -> pi(obj) ---------------------------------------
-    def objects_of(self, pred: str) -> DataFrame:
-        return self.df.where(F.col("pred") == self.lit(pred)).select("obj", "obj_kind").distinct()
-
     # -- the (subj, obj) hop for one predicate ----------------------------
     def p(self, pred: str, with_kind: bool = False) -> DataFrame:
         cols = ["subj", "obj"] + (["obj_kind"] if with_kind else [])
@@ -98,8 +94,9 @@ def path_join(store: TripleStore, preds: list[str]) -> DataFrame:
 
     The reference walks the path per-subject (O(|subjects| * path) nested
     loop); this is the set-at-a-time equivalent: a chain of equi-joins.
-    Every hop after the first is hinted broadcastable: the paths followed
-    are qb metadata paths, schema-scale at any data scale.
+    IC-10 follows qb:sliceStructure/qb:componentProperty with it: the first
+    hop starts at the slices, which can be observation-scale, so it stays a
+    distributed scan; every later hop is hinted broadcastable.
     """
     assert preds, "empty property path"
     hop = store.p(preds[0])
@@ -113,35 +110,3 @@ def path_join(store: TripleStore, preds: list[str]) -> DataFrame:
             .select("root", F.col("_o").alias("leaf"))
         )
     return acc.distinct()
-
-
-# ---------------------------------------------------------------------------
-# J2: star/intersection join (searchByMultipleProperty,
-# ValidatorBase.java:85-106): subjects satisfying ALL (pred, obj) constraints.
-# ---------------------------------------------------------------------------
-def star_subjects(store: TripleStore, constraints: list[tuple[str, str]]) -> DataFrame:
-    """Chain of left-semi joins; Catalyst reorders + broadcasts small sides."""
-    assert constraints, "empty constraint list"
-    pred0, obj0 = constraints[0]
-    acc = store.subjects_with(pred0, obj0)
-    for pred, obj in constraints[1:]:
-        acc = acc.join(
-            store.subjects_with(pred, obj), "subj", "left_semi"
-        )
-    return acc
-
-
-# ---------------------------------------------------------------------------
-# J3: star join + fan-out projection (ValidatorBase.java:123-139): for each
-# qualifying subject, fetch all values of ``fetch_pred``.
-# Returns (subj, obj[, obj_kind]) — subjects with no value are absent, which
-# matches the reference's empty-set entries contributing nothing downstream.
-# ---------------------------------------------------------------------------
-def star_fetch(
-    store: TripleStore,
-    constraints: list[tuple[str, str]],
-    fetch_pred: str,
-    with_kind: bool = False,
-) -> DataFrame:
-    qualified = star_subjects(store, constraints)
-    return qualified.join(store.p(fetch_pred, with_kind=with_kind), "subj", "inner")

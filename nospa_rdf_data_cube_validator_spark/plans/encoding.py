@@ -143,11 +143,11 @@ class EncodedTripleStore(TripleStore):
 def encode_store(store: TripleStore, parts: int = 64) -> EncodedTripleStore:
     """Build the dictionary from a string store and return its encoded twin.
 
-    The dictionary is persisted: it is read four times downstream (the
-    vocabulary-constant collect plus the three encode joins), each of
-    which would otherwise re-run the full distinct+range-sort plan, and
-    the materialized cache gives AQE an exact size so the encode joins
-    convert to broadcast when the dictionary fits (guide §5: reuse that
-    outweighs the memory it holds)."""
-    d = build_dictionary(store.df, parts=parts).persist()
+    The dictionary is materialized by ``localCheckpoint``, not a cache: a
+    recomputation would number the terms anew (the ids come from a
+    sampled range partitioning) and the encoded triples would decode to
+    wrong terms silently, while a lost checkpoint block fails the job. It
+    is read four times downstream (the vocabulary-constant collect plus
+    the three encode joins) without re-running its plan."""
+    d = build_dictionary(store.df, parts=parts).localCheckpoint(eager=True)
     return EncodedTripleStore(encode_triples(store.df, d), d)

@@ -1,13 +1,19 @@
 """The schema slice of a triple store, held on the driver.
 
-DSDs, component specs, component properties, code lists and hierarchies
-are human-authored: they stay schema-scale at any observation scale. The
+DSDs, component specs, slice keys, code lists and hierarchies are
+human-authored: they stay schema-scale at any observation scale. The
 reference keeps them, with the rest of the model, in memory
-(nonsparql/NospaValidator.java:17) and its normalizer and validators read
-them straight from it. Here ONE capped filter+collect job over the store
-fetches the triples of this vocabulary, and normalization (N2 and the
-N3-N5 schema sides) and the validator's metadata frames are derived from
-the collected rows in Python, with no further pass over the store.
+(nonsparql/NospaValidator.java:17). Here ONE capped filter+collect job
+fetches the triples of this vocabulary, and its readers derive what they
+need from the collected rows in Python, with no further pass over the
+store:
+
+- normalization: N2 and the N3-N5 (ds, comp) sides;
+- IC-2..IC-8 in full: structure, components, componentRequired,
+  rdfs:range, qb:codeList, qb:sliceKey and the typed DataSets, DSDs and
+  SliceKeys;
+- the metadata sides of the other ICs (IC-13's required attributes, the
+  per-dataset dimensions and measures, code lists, hierarchies).
 
 Observation-scale predicates (qb:dataSet, qb:observation, qb:slice,
 qb:measureType, skos:inScheme/member, rdf:type qb:Observation /
@@ -35,6 +41,9 @@ SLICE_PREDS = (
     qb.QB_CODE_LIST,
     qb.QB_PARENT_CHILD_PROPERTY,
     qb.QB_HIERARCHY_ROOT,
+    qb.RDFS_RANGE,
+    qb.QB_COMPONENT_REQUIRED,
+    qb.QB_SLICE_KEY_PROP,
 )
 #: rdf:type classes whose typing triples belong to the schema slice
 SLICE_CLASSES = (
@@ -42,6 +51,9 @@ SLICE_CLASSES = (
     qb.QB_MEASURE_PROPERTY,
     qb.QB_ATTRIBUTE_PROPERTY,
     qb.QB_HIERARCHICAL_CODE_LIST,
+    qb.QB_DATASET,
+    qb.QB_DSD,
+    qb.QB_SLICE_KEY,
 )
 #: a store whose schema slice holds more triples than this is rejected
 #: (ValueError): the slice is held on the driver and there is no
@@ -64,7 +76,7 @@ class SchemaSlice:
         if len(rows) > METADATA_CAP:
             raise ValueError(
                 f"schema slice exceeds METADATA_CAP={METADATA_CAP} triples "
-                "(structure, component, code-list and hierarchy declarations)"
+                "(structure, component, slice-key, code-list and hierarchy declarations)"
             )
         self._by_pred: dict = {}
         for r in rows:
@@ -78,19 +90,37 @@ class SchemaSlice:
         """Distinct (subj, obj) of ``pred``."""
         return {(r.subj, r.obj) for r in self.edges(pred)}
 
+    def objects(self, pred: str) -> dict:
+        """subj -> the set of its objects of ``pred``."""
+        out: dict = {}
+        for r in self.edges(pred):
+            out.setdefault(r.subj, set()).add(r.obj)
+        return out
+
+    def subjects(self, pred: str, obj: str) -> set:
+        """Subjects of ``pred`` with the constant term ``obj``."""
+        value = self._tv(obj)
+        return {r.subj for r in self.edges(pred) if r.obj == value}
+
     def typed(self, rdf_class: str) -> set:
         """Subjects typed ``rdf_class`` (one of SLICE_CLASSES)."""
-        cls = self._tv(rdf_class)
-        return {r.subj for r in self.edges(qb.RDF_TYPE) if r.obj == cls}
+        return self.subjects(qb.RDF_TYPE, rdf_class)
 
     @cached_property
     def ds_specs(self) -> set:
         """(ds, spec): ?ds qb:structure/qb:component ?spec."""
-        specs: dict = {}
-        for dsd, spec in self.pairs(qb.QB_COMPONENT):
-            specs.setdefault(dsd, set()).add(spec)
+        specs = self.objects(qb.QB_COMPONENT)
         structure = self.pairs(qb.QB_STRUCTURE)
         return {(ds, spec) for ds, dsd in structure for spec in specs.get(dsd, ())}
+
+    @cached_property
+    def dsd_props(self) -> dict:
+        """dsd -> {prop}: ?dsd qb:component/qb:componentProperty ?prop."""
+        props = self.objects(qb.QB_COMPONENT_PROPERTY)
+        return {
+            dsd: {p for spec in specs for p in props.get(spec, ())}
+            for dsd, specs in self.objects(qb.QB_COMPONENT).items()
+        }
 
     @cached_property
     def ds_comp_props(self) -> list:

@@ -98,6 +98,43 @@ def test_decode_never_shuffles_the_dictionary(spark, engines):
     assert "BroadcastHashJoin" in plan, plan
 
 
+@pytest.mark.parametrize("n", [2, 3, 4, 5, 6, 7, 8, 13])
+def test_encoded_schema_ics_match_on_violating_cube(spark, n):
+    """The schema-only ICs (IC-2..IC-8, and IC-13's required-attribute side)
+    compare slice terms against vocabulary constants such as the typed
+    booleans and skos:Concept; on a cube that violates icN, the encoded
+    store decodes to the string store's icN rows, and they are not empty.
+    One normalize per mutation: several mutations reuse eg:ds2."""
+    from nospa_rdf_data_cube_validator_spark.operators.validate import IC_KEY_COLUMNS
+
+    raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + getattr(fx, f"mut_ic{n}")()))
+    s_norm = normalize(raw)
+    s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
+    e_norm = normalize(encode_store(raw, parts=4))
+    e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
+    ic = f"ic{n}"
+    s_df = getattr(CubeValidator(s_norm), ic)()
+    e_df = getattr(CubeValidator(e_norm), ic)()
+    # term-valued key columns decoded; scalar columns (ic2's n_dsds) as is;
+    # the id-space array columns are left out
+    cols = [c for c, t in s_df.dtypes if not t.startswith("array")]
+    e_dec = e_norm.decode(e_df.select(*cols), IC_KEY_COLUMNS[ic])
+    want = {tuple(r[c] for c in cols) for r in s_df.select(*cols).collect()}
+    got = {tuple(r[c] for c in cols) for r in e_dec.collect()}
+    assert got == want and len(want) > 0, (want, got)
+
+
+def test_dictionary_ids_survive_unpersist(spark):
+    """encode_store's dictionary keeps every term's id after the frame is
+    unpersisted: a recomputation would number the terms anew, and the
+    triples already encoded would decode to other terms."""
+    enc = encode_store(TripleStore(terms.triples_df(spark, fx.golden_rows())), parts=4)
+    before = {r["term"]: r["id"] for r in enc.dictionary.collect()}
+    enc.dictionary.unpersist()
+    after = {r["term"]: r["id"] for r in enc.dictionary.collect()}
+    assert after == before
+
+
 def test_encoded_ic12_representative_choice_matches(spark):
     """The IC-12 'all but the MINIMUM obs' pick must survive encoding —
     guaranteed only because the dictionary is order-preserving."""

@@ -76,12 +76,19 @@ def test_golden_cube_ic4_flags_sex(validator):
     assert _col_set(validator.ic4(), "dim") == {fx.SEX}
 
 
-@pytest.mark.parametrize("ic", ["ic15", "ic16", "ic19", "ic20", "ic21"])
+@pytest.mark.parametrize(
+    "ic", [f"ic{i}" for i in range(2, 9)] + ["ic15", "ic16", "ic19", "ic20", "ic21"]
+)
 def test_absent_features_plan_away(golden_store, ic):
-    """The golden cube has no qb:measureType, no qb:codeList and no
-    hierarchical code list, so the metadata frames these ICs join are empty
-    local relations and the optimizer folds each IC into an empty
-    LocalRelation: no observation-scale scan is left to run."""
+    """No IC here plans a scan of the store on the golden cube.
+
+    - IC-2..IC-8 read only schema vocabulary, so each is computed on the
+      driver from the schema slice and is a local relation on any cube (on
+      the golden cube every one is empty except ic4's one row).
+    - The golden cube has no qb:measureType, no qb:codeList and no
+      hierarchical code list, so the metadata frames IC-15/16/19/20/21 join
+      are empty local relations and the optimizer folds each of them into
+      an empty LocalRelation: no observation-scale scan is left to run."""
     plan = getattr(CubeValidator(golden_store), ic)()._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation"
     assert "LogicalRDD" not in plan.toString()
