@@ -1,10 +1,10 @@
 """spark-submit entry point.
 
-Usage:
-  spark-submit --py-files engine.zip main.py validate <cube.{ttl,nt,parquet}> [--report DIR] [--strict]
-  spark-submit --py-files engine.zip main.py pipeline <transcripts.parquet> <workdir> [--report DIR] [--no-encoded]
-  spark-submit --py-files engine.zip main.py export <cube.{ttl,nt,xml,parquet}> <out> [--format nt|ttl|xml|parquet] [--normalize]
-  spark-submit --py-files engine.zip main.py stream-dups <obs_dir> <out_dir> --checkpoint DIR [--once]
+Usage (SUBMIT = spark-submit --properties-file dist/spark-defaults.conf --py-files dist/engine.zip):
+  SUBMIT main.py validate <cube.{ttl,nt,parquet}> [--report DIR] [--strict]
+  SUBMIT main.py pipeline <transcripts.parquet> <workdir> [--report DIR] [--no-encoded]
+  SUBMIT main.py export <cube.{ttl,nt,xml,parquet}> <out> [--format nt|ttl|xml|parquet] [--normalize]
+  SUBMIT main.py stream-dups <obs_dir> <out_dir> --checkpoint DIR [--once]
 
 ``validate`` mirrors the reference CLI (Main.java:21-58): load an RDF cube,
 normalize, run all 21 integrity constraints, write validation_result_<ts>.md
@@ -14,7 +14,11 @@ transcript table with checkpoint-resume in <workdir> (re-running after a
 kill resumes from the last completed snapshot) and validates its at-rest
 cube the same way (pipeline.validate_store).
 
-Build the zip with: python tools/package.py -> dist/engine.zip
+Build both files with: python tools/package.py -> dist/engine.zip and
+dist/spark-defaults.conf. The properties file carries the driver JVM's
+compile policy (session.DRIVER_JAVA_OPTIONS), which spark-submit applies
+when it starts the JVM, before get_spark runs. spark-submit's --master and
+--driver-memory are kept: get_spark does not override a running driver's.
 """
 
 from __future__ import annotations

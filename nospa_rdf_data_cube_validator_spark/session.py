@@ -3,6 +3,25 @@
 Local testing runs on ``local[N]``; the same settings are what we would ship
 in spark-defaults for a 1000-executor cluster run (AQE on, skew-join on,
 Arrow on). Nothing here is sandbox-specific.
+
+The driver JVM compiles with C1 only (``DRIVER_JAVA_OPTIONS``). A job on the
+small inputs this engine serves is hundreds of short Spark jobs over
+thousands of generated classes, and HotSpot's C2 compiler threads spent
+more CPU optimizing that code than the tasks spent running it: in a cold
+3K-observation ``cube_validate`` run (``local[2]``, 4 vCPUs), 40-59 s of the
+JVM's 62-72 s, against 7-8 s of task CPU. Stopping tiered compilation at
+C1 halved the cold job's CPU on the benchmark (medians 62.8 -> 29.5 s on
+``cube_validate``, 40.6 -> 20.8 s on ``kg_build``; -46% on both at 8x input,
+with wall time no longer) and took 7% off peak memory. Under ``local[N]``
+the driver JVM is the whole engine; cluster executors keep the JVM's
+default policy.
+
+``get_spark`` passes the policy as ``spark.driver.defaultJavaOptions``, which
+Spark's launcher puts in front of a caller's ``spark.driver.extraJavaOptions``,
+so both reach the JVM. Under ``spark-submit`` the driver JVM is running
+before ``get_spark`` is called: the policy reaches it through the
+``--properties-file`` that ``tools/package.py`` writes, and ``get_spark``
+keeps the launcher's master and heap.
 """
 
 from __future__ import annotations
@@ -11,6 +30,7 @@ import os
 import re
 
 import pyarrow as pa
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
@@ -119,6 +139,24 @@ def oha_fallback_threshold(driver_memory: str, master: str) -> int:
     return max(1, heap // (2 * cores * OHA_BYTES_PER_KEY))
 
 
+#: the driver JVM's compile policy: tiered compilation stops at C1, so C2
+#: never runs (see the module docstring)
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+
+
+def _launched_driver_conf() -> SparkConf | None:
+    """The launch conf of a driver JVM that is already running, or None
+    when ``get_spark`` is to launch it. ``spark-submit`` starts the JVM
+    before the Python driver and hands it over through
+    ``PYSPARK_GATEWAY_PORT``; an earlier session of this process leaves its
+    JVM up. Either way the launcher set the JVM's ``spark.*`` system
+    properties, which a loaded ``SparkConf`` reads back, and fixed its heap."""
+    if SparkContext._jvm is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf()
+
+
 def get_spark(
     app_name: str = "nospa-cube-spark",
     master: str | None = None,
@@ -126,19 +164,37 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
-    driver_memory = os.environ.get("SPARK_DRIVER_MEM", "8g")
     # The pre-importing worker daemon (worker_daemon.py) must be
     # importable by the Python the JVM spawns; the driver's sys.path
-    # injection does not propagate, so export the package root on
-    # PYTHONPATH before the JVM (which inherits this environment) starts.
+    # injection does not propagate. A JVM that get_spark launches inherits
+    # this process's PYTHONPATH; a running one passes the workers
+    # spark.executorEnv.PYTHONPATH.
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + existing if existing else "")
+    launched = _launched_driver_conf()
+    if launched is None:
+        existing = os.environ.get("PYTHONPATH", "")
+        if pkg_root not in existing.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                pkg_root + (os.pathsep + existing if existing else "")
+            )
+        master = master or f"local[{cpus}]"
+        driver_memory = os.environ.get("SPARK_DRIVER_MEM", "8g")
+        # Spark's launcher puts spark.driver.defaultJavaOptions in front of
+        # a caller's spark.driver.extraJavaOptions, so both reach the JVM
+        launch_conf = {
+            "spark.driver.memory": driver_memory,
+            "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
+        }
+    else:
+        # the running JVM's heap stands, and so does its master unless the
+        # caller names one; Spark's launcher sizes the heap from
+        # spark.driver.memory, then SPARK_DRIVER_MEMORY, then 1g
+        master = master or launched.get("spark.master", f"local[{cpus}]")
+        driver_memory = launched.get(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "1g")
         )
+        launch_conf = {"spark.executorEnv.PYTHONPATH": pkg_root}
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -206,10 +262,9 @@ def get_spark(
             "spark.python.daemon.module",
             "nospa_rdf_data_cube_validator_spark.worker_daemon",
         )
-        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**launch_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -222,11 +277,14 @@ def _warm_session(spark: SparkSession) -> None:
     range data: whole-stage codegen + Janino compilation for the common
     operator shapes (hash/sort aggregate, shuffled join, window, sort,
     broadcast), the AQE re-planning loop, and the Arrow Python runner.
-    The first REAL query otherwise pays this JIT tax (measured 2-4 s
-    across the first queries of a fresh session). Touches no input data
-    and computes no reusable results — it is the same per-session
-    constant a connection pool warms away, applied to the JVM. Idempotent
-    per session."""
+    The first REAL job otherwise pays this compile work itself. Measured
+    under the C1-only policy (benchmark inputs, ``local[2]``, 4 vCPUs, 3
+    runs each way): without the warm-up, session set-up is 8.6 s
+    (``cube_validate``) and 11 s (``kg_build``) shorter, but the first
+    job's CPU is 10.5 s (+33%) and 9 s (+39%) higher and its wall time
+    8 s and 7 s longer. Touches no input data and computes no reusable
+    results — it is the same per-session constant a connection pool warms
+    away, applied to the JVM. Idempotent per session."""
     if getattr(spark, "_nospa_warmed", False):
         return
     try:
