@@ -9,7 +9,7 @@ triple rows, unioned and deduplicated — INSERT-only and idempotent, as
 required by SURVEY.md §7.0.
 
 Scale shape: the schema sides come from the driver-held schema slice
-(plans/schema.py), one capped filter+collect per phase; N2 is derived
+(plans/schema.py), one capped filter+collect of the input; N2 is derived
 from it entirely in Python, and the N3-N5 (ds, component) sides become
 local relations, so a cube without dataset- or slice-attached components
 folds those push-downs away at plan time. Only the observation-scale
@@ -57,12 +57,11 @@ def _obj_as_subj(store: TripleStore, pred: str) -> DataFrame:
     )
 
 
-def _n2_rows(store: TripleStore) -> set:
+def _n2_rows(store: TripleStore, schema: SchemaSlice) -> set:
     """N2 (Normalizer.java:54-71) from the driver-held schema slice:
     ?spec qb:dimension|measure|attribute ?p  =>
     ?p a qb:{Dimension,Measure,Attribute}Property (resource ?p only) ;
     ?spec qb:componentProperty ?p (the edge's object columns kept)."""
-    schema = SchemaSlice(store)
     tv = store.term_value
     rdf_type, comp_prop = tv(qb.RDF_TYPE), tv(qb.QB_COMPONENT_PROPERTY)
     out = set()
@@ -87,6 +86,11 @@ def normalize_phase1(store: TripleStore) -> TripleStore:
     Returns the store unioned with the derived triples WITHOUT the set-dedup
     shuffle (a multiset): normalize() pays for one full-output dedup total
     instead of one per phase."""
+    return _phase1(store, _n2_rows(store, SchemaSlice(store)))
+
+
+def _phase1(store: TripleStore, n2: set) -> TripleStore:
+    """normalize_phase1 with its N2 rows given."""
     rel = store.df
     new_parts: list[DataFrame] = []
 
@@ -112,21 +116,20 @@ def normalize_phase1(store: TripleStore) -> TripleStore:
     # full-column dedup: the non-key columns are branch constants (see
     # normalize() — codegen HashAggregate instead of SortAggregate+First)
     derived = derived.dropDuplicates()
-    n2 = local_frame(rel.sparkSession, _n2_rows(store), rel.select(*terms.TRIPLE_COLS).schema)
-    return store.with_df(rel.unionByName(derived).unionByName(n2))
+    n2_df = local_frame(rel.sparkSession, n2, rel.select(*terms.TRIPLE_COLS).schema)
+    return store.with_df(rel.unionByName(derived).unionByName(n2_df))
 
 
-def _push_down_comps(store: TripleStore) -> tuple[set, set]:
+def _push_down_comps(store: TripleStore, schema: SchemaSlice) -> tuple[set, set]:
     """The (ds, comp) pairs whose values phase 2 pushes down, from the
-    driver-held schema slice (?ds qb:structure/qb:component ?spec, IRI
-    ?spec qb:componentProperty ?comp; Normalizer.java:91-92,107,142):
+    store's driver-held schema slice (?ds qb:structure/qb:component ?spec,
+    IRI ?spec qb:componentProperty ?comp; Normalizer.java:91-92,107,142):
 
     - onto observations (N3): specs with qb:componentAttachment qb:DataSet;
     - from slices onto their observations: specs with
       qb:componentAttachment qb:Slice (N4) and every comp typed
       qb:DimensionProperty (N5). Both rules copy the slice's values of the
       comp to the slice's observations, so one pair set serves them."""
-    schema = SchemaSlice(store)
     tv = store.term_value
     comps: dict = {}
     for r in schema.edges(qb.QB_COMPONENT_PROPERTY):
@@ -181,10 +184,15 @@ def normalize_phase2(store: TripleStore) -> TripleStore:
     multiset like phase 1's: duplicate observation-side rows only
     duplicate derived rows that normalize()'s final dedup removes.
     """
+    return _phase2(store, SchemaSlice(store))
+
+
+def _phase2(store: TripleStore, schema: SchemaSlice) -> TripleStore:
+    """normalize_phase2 with the store's schema slice given."""
     df = store.df
     # terms, never null: the derived pred column keeps the store's nullability
     cols = "ds {t} NOT NULL, comp {t} NOT NULL".format(t=store.term_sql_type)
-    ds_pairs, slice_pairs = _push_down_comps(store)
+    ds_pairs, slice_pairs = _push_down_comps(store, schema)
     ds_comp = local_frame(df.sparkSession, ds_pairs, cols)
     slice_ds_comp = local_frame(df.sparkSession, slice_pairs, cols)
 
@@ -218,13 +226,20 @@ def normalize(store: TripleStore) -> TripleStore:
     (set semantics restored at the end; phase 2 only ever *reads* metadata
     projections that are themselves deduplicated).
 
+    The schema slice is collected once, from the input: phase 2 reads
+    only its component, componentAttachment and DimensionProperty parts,
+    to which phase 1 adds nothing but the N2 rows (N1 types observations,
+    datasets and slices), so there the input's slice plus N2 reads as
+    phase 1's output's would.
+
     Phase 1's multiset result is materialized (localCheckpoint — a narrow
-    write, no shuffle) before phase 2, which collects its schema slice and
-    scans the store for the push-down joins; an unmaterialized union would
-    re-execute the phase-1 derivation per scan."""
-    p1 = normalize_phase1(store)
+    write, no shuffle) before phase 2 scans it for the push-down joins; an
+    unmaterialized union would re-execute the phase-1 derivation per scan."""
+    schema = SchemaSlice(store)
+    n2 = _n2_rows(store, schema)
+    p1 = _phase1(store, n2)
     p1 = p1.with_df(p1.df.localCheckpoint(eager=True))
-    multiset = normalize_phase2(p1)
+    multiset = _phase2(p1, schema.plus(n2))
     # FULL-column dedup on purpose: a subset-key dropDuplicates plans as
     # an Aggregate with First(obj_kind)/First(obj_datatype)/First(obj_lang)
     # — string buffers that force SortAggregate (two sorts of every row by

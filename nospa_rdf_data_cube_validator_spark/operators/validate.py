@@ -22,6 +22,17 @@ other ICs join its Python-derived local relations as broadcasts; the only
 observation-scale shuffles are the per-observation aggregations feeding
 IC-1/11/12/13/14/15/16/17, each a single groupBy/window keyed by
 observation or (dataset, dim-key).
+
+Absent vocabulary builds no plan. The same collect observes the store's
+distinct predicates and rdf:type classes, and an IC whose driving
+vocabulary the cube lacks returns the empty frame of its declared schema
+(COLUMNS) at the top of its method: IC-9 (no qb:Slice), IC-10 (no
+qb:sliceStructure), IC-15/16 (no dataset with a qb:measureType
+component), IC-17 (no qb:measureType), IC-18 (no qb:slice or no
+qb:observation), IC-19 (no code list on a dimension) and IC-20/21 (none
+of those lists hierarchical). Each guard holds in both modes because the
+full plan is empty by construction whenever it fires: these ICs' empty
+side is data, which Catalyst cannot fold.
 """
 
 from __future__ import annotations
@@ -44,17 +55,42 @@ def _sql_term(v) -> str:
     return "'" + str(v).replace("'", "''") + "'" if isinstance(v, str) else str(v)
 
 
-#: term-valued key columns of each constraint's violation frame — the
-#: columns an encoded store must decode() for human-readable reports
-#: (array-valued columns like `datasets`/`code_lists` stay id-space).
-IC_KEY_COLUMNS: dict[str, list[str]] = {
-    "ic1": ["obs"], "ic2": ["ds"], "ic3": ["dsd"], "ic4": ["dim"],
-    "ic5": ["dim"], "ic6": ["comp_prop"], "ic7": ["slice_key"],
-    "ic8": ["comp_prop"], "ic9": ["slice"], "ic10": ["slice", "dim"],
-    "ic11": ["obs", "dim"], "ic12": ["obs"], "ic13": ["obs", "attr"],
-    "ic14": ["obs", "measure"], "ic15": ["obs"], "ic16": ["obs"],
-    "ic17": ["obs"], "ic18": ["ds", "obs"], "ic19": ["value"],
-    "ic20": ["value"], "ic21": ["value"],
+#: every IC's violation columns, declared once; STRICT_COLUMNS holds the
+#: ICs whose strict_w3c plan returns other columns (IC-15/16/19) or other
+#: nullability (IC-20/21). ``{t}`` is a store term — a string, or an int64
+#: dictionary id on an encoded store — and these scalar term columns are
+#: the ones an encoded store decodes for a readable report; ``{t}[]`` is a
+#: sorted array of terms with no null element (it stays in id space); any
+#: other type is DDL.
+COLUMNS: dict[str, str] = {
+    "ic1": "obs {t} NOT NULL, n_datasets bigint, datasets {t}[] NOT NULL",
+    "ic2": "ds {t} NOT NULL, n_dsds bigint, dsds {t}[] NOT NULL",
+    "ic3": "dsd {t} NOT NULL",
+    "ic4": "dim {t}",
+    "ic5": "dim {t} NOT NULL",
+    "ic6": "comp_prop {t} NOT NULL",
+    "ic7": "slice_key {t} NOT NULL",
+    "ic8": "comp_prop {t} NOT NULL",
+    "ic9": "slice {t} NOT NULL, n_structures bigint, structures {t}[] NOT NULL",
+    "ic10": "slice {t} NOT NULL, dim {t} NOT NULL",
+    "ic11": "obs {t} NOT NULL, dim {t}",
+    "ic12": "obs {t} NOT NULL",
+    "ic13": "obs {t} NOT NULL, attr {t} NOT NULL",
+    "ic14": "obs {t} NOT NULL, measure {t} NOT NULL",
+    "ic15": "obs {t} NOT NULL, measure_types array<{t}> NOT NULL",
+    "ic16": "obs {t} NOT NULL, measure_types array<{t}> NOT NULL",
+    "ic17": "obs {t} NOT NULL, n_unequal bigint NOT NULL",
+    "ic18": "obs {t} NOT NULL, ds {t} NOT NULL",
+    "ic19": "value {t}, code_lists {t}[] NOT NULL",
+    "ic20": "value {t}, code_lists {t}[] NOT NULL",
+    "ic21": "value {t}, code_lists {t}[] NOT NULL",
+}
+STRICT_COLUMNS: dict[str, str] = {
+    "ic15": "obs {t} NOT NULL, measure {t} NOT NULL",
+    "ic16": "obs {t} NOT NULL, measure {t} NOT NULL",
+    "ic19": "obs {t} NOT NULL, dim {t}",
+    "ic20": "value {t} NOT NULL, code_lists {t}[] NOT NULL",
+    "ic21": "value {t} NOT NULL, code_lists {t}[] NOT NULL",
 }
 
 
@@ -134,10 +170,44 @@ class CubeValidator:
     def __exit__(self, *exc) -> None:
         self.unpersist()
 
+    def _columns(self, ic: str) -> list[list[str]]:
+        """[name, type, *NOT NULL] of each of ``ic``'s declared columns in
+        this validator's mode."""
+        ddl = (self.strict_w3c and STRICT_COLUMNS.get(ic)) or COLUMNS[ic]
+        return [c.split(" ") for c in ddl.split(", ")]
+
+    def output_schema(self, ic: str) -> T.StructType:
+        """The schema of ``getattr(self, ic)()`` over this store, in this mode."""
+        t = self.store.term_sql_type
+        out = T.StructType()
+        for name, typ, *not_null in self._columns(ic):
+            if typ == "{t}[]":
+                dt = T.ArrayType(T.DataType.fromDDL(t), False)
+            else:
+                dt = T.DataType.fromDDL(typ.format(t=t))
+            out.add(name, dt, not not_null)
+        return out
+
+    def term_columns(self, ic: str) -> list[str]:
+        """``ic``'s scalar term columns: what an encoded store decodes."""
+        return [name for name, typ, *_ in self._columns(ic) if typ == "{t}"]
+
+    def _skip(self, ic: str) -> DataFrame:
+        """``ic``'s violations on a cube without the vocabulary that drives
+        it: the empty frame of its declared schema. Each guard that returns
+        it is an identity (the full plan is empty by construction), so no
+        plan is built and no job runs."""
+        return local_frame(self._spark(), [], self.output_schema(ic))
+
+    def _holds(self, pred: str) -> bool:
+        """Whether some triple of the store has predicate ``pred``."""
+        return self.store.term_value(pred) in self._schema().preds
+
     def _schema(self) -> SchemaSlice:
-        """The store's schema slice (plans/schema.py), collected by the
-        first IC that needs metadata. Every metadata frame below is derived
-        from its rows in Python with no further Spark job; a slice over
+        """The store's schema slice and catalog (plans/schema.py), collected
+        by the first IC that needs metadata. Every metadata frame below is
+        derived from its rows in Python with no further Spark job, and the
+        absent-vocabulary guards read its catalog; a slice over
         METADATA_CAP triples raises ValueError (the validator, like the
         reference, holds the schema in memory)."""
         return self._cached("schema", lambda: SchemaSlice(self.store))
@@ -158,9 +228,9 @@ class CubeValidator:
             ),
         )
 
-    def _column(self, key: str, ddl: str, values) -> DataFrame:
+    def _column(self, key: str, schema, values) -> DataFrame:
         """Memoized one-column ``_frame`` of the sorted terms ``values()``."""
-        return self._frame(key, lambda: [(v,) for v in sorted(values())], ddl)
+        return self._frame(key, lambda: [(v,) for v in sorted(values())], schema)
 
     def obs_ds(self) -> DataFrame:
         """(obs, ds): the observation-scale qb:dataSet edge table."""
@@ -248,9 +318,7 @@ class CubeValidator:
             found = ((ds, dsds.get(ds, [])) for ds in sorted(schema.typed(qb.QB_DATASET)))
             return [(ds, len(objs), sorted(set(objs))) for ds, objs in found if len(objs) != 1]
 
-        t = T.DataType.fromDDL(self.store.term_sql_type)
-        cols = T.StructType().add("ds", t, False).add("n_dsds", T.LongType())
-        return self._frame("ic2", rows, cols.add("dsds", T.ArrayType(t, False), False))
+        return self._frame("ic2", rows, self.output_schema("ic2"))
 
     def ic3(self) -> DataFrame:
         """IC-3 DSD includes measure (ValidatorIC3.java:25-39) -> (dsd)."""
@@ -260,7 +328,7 @@ class CubeValidator:
             props = schema.dsd_props
             return {d for d in schema.typed(qb.QB_DSD) if not props.get(d, set()) & measures}
 
-        return self._column("ic3", "dsd {t} NOT NULL", dsds)
+        return self._column("ic3", self.output_schema("ic3"), dsds)
 
     def ic4(self) -> DataFrame:
         """IC-4 Dimensions have range (ValidatorIC4.java:22-30) -> (dim)."""
@@ -268,7 +336,7 @@ class CubeValidator:
             schema = self._schema()
             return schema.typed(qb.QB_DIMENSION_PROPERTY) - schema.objects(qb.RDFS_RANGE).keys()
 
-        return self._column("ic4", "dim {t}", dims)
+        return self._column("ic4", self.output_schema("ic4"), dims)
 
     def ic5(self) -> DataFrame:
         """IC-5 Concept dimensions have code lists (ValidatorIC5.java:23-34) -> (dim)."""
@@ -278,7 +346,7 @@ class CubeValidator:
             concept &= schema.subjects(qb.RDFS_RANGE, qb.SKOS_CONCEPT)
             return concept - schema.objects(qb.QB_CODE_LIST).keys()
 
-        return self._column("ic5", "dim {t} NOT NULL", dims)
+        return self._column("ic5", self.output_schema("ic5"), dims)
 
     def ic6(self) -> DataFrame:
         """IC-6 Only attributes may be optional (ValidatorIC6.java:21-38) -> (comp_prop).
@@ -295,7 +363,7 @@ class CubeValidator:
             found = {p for spec, p in schema.pairs(qb.QB_COMPONENT_PROPERTY) if spec in optional}
             return found - schema.typed(qb.QB_ATTRIBUTE_PROPERTY)
 
-        return self._column("ic6", "comp_prop {t} NOT NULL", props)
+        return self._column("ic6", self.output_schema("ic6"), props)
 
     def ic7(self) -> DataFrame:
         """IC-7 Slice keys must be declared (ValidatorIC7.java:23-34) -> (slice_key)."""
@@ -305,7 +373,7 @@ class CubeValidator:
             attached = {sk for dsd, sk in schema.pairs(qb.QB_SLICE_KEY_PROP) if dsd in dsds}
             return schema.typed(qb.QB_SLICE_KEY) - attached
 
-        return self._column("ic7", "slice_key {t} NOT NULL", keys)
+        return self._column("ic7", self.output_schema("ic7"), keys)
 
     def ic8(self) -> DataFrame:
         """IC-8 Slice keys consistent with DSD (ValidatorIC8.java:24-47) -> (comp_prop).
@@ -326,15 +394,23 @@ class CubeValidator:
                 if p not in schema.dsd_props.get(dsd, ())
             }
 
-        return self._column("ic8", "comp_prop {t} NOT NULL", props)
+        return self._column("ic8", self.output_schema("ic8"), props)
 
     def ic9(self) -> DataFrame:
-        """IC-9 Unique slice structure (ValidatorIC9.java:23-34) -> (slice, structures, n_structures)."""
+        """IC-9 Unique slice structure (ValidatorIC9.java:23-34) -> (slice, structures, n_structures).
+
+        Skipped when no subject is typed qb:Slice."""
+        if self.store.term_value(qb.QB_SLICE) not in self._schema().classes:
+            return self._skip("ic9")
         slices = self.store.typed(qb.QB_SLICE)
         return self._count_check(slices, self._hop2(qb.QB_SLICE_STRUCTURE), "slice", "structures")
 
     def ic10(self) -> DataFrame:
-        """IC-10 Slice dimensions complete (ValidatorIC10.java:20-34) -> (slice, dim)."""
+        """IC-10 Slice dimensions complete (ValidatorIC10.java:20-34) -> (slice, dim).
+
+        Skipped without a qb:sliceStructure triple."""
+        if not self._holds(qb.QB_SLICE_STRUCTURE):
+            return self._skip("ic10")
         slice_dims = (
             path_join(self.store, [qb.QB_SLICE_STRUCTURE, qb.QB_COMPONENT_PROPERTY])
             .select(F.col("root").alias("slice"), F.col("leaf").alias("dim"))
@@ -761,7 +837,11 @@ class CubeValidator:
         (IntegrityConstraint.java:178-187): EVERY qb:measureType binding of
         an observation in a measureType cube must have a value on that
         observation — no exactly-one split, no declared-measure check;
-        output is (obs, measure) per failing binding."""
+        output is (obs, measure) per failing binding.
+
+        Skipped when no dataset has qb:measureType among its components."""
+        if not self._mt_ds_vals():
+            return self._skip("ic15")
         if self.strict_w3c:
             obs_in_mt = (
                 self.obs_ds()
@@ -804,7 +884,11 @@ class CubeValidator:
         qb:measureType ?m plus a value for some OTHER measure ?om (typed
         MeasureProperty AND declared in the dsd's components) is flagged as
         (obs, measure=?m) — per binding, independent of how many
-        measureTypes the observation has."""
+        measureTypes the observation has.
+
+        Skipped when no dataset has qb:measureType among its components."""
+        if not self._mt_ds_vals():
+            return self._skip("ic16")
         if self.strict_w3c:
             mt_edges = self.store.p(qb.QB_MEASURE_TYPE).select(
                 F.col("subj").alias("obs"), F.col("obj").alias("measure")
@@ -862,7 +946,12 @@ class CubeValidator:
         strict_w3c=True uses the official SPARQL reading instead: every
         declared dimension must match with BOTH values present, so an
         observation lacking a single value for some dimension matches
-        nothing (equal-count 0) rather than skipping the dimension."""
+        nothing (equal-count 0) rather than skipping the dimension.
+
+        Skipped without a qb:measureType triple: only observations that
+        carry one are checked, in both modes."""
+        if not self._holds(qb.QB_MEASURE_TYPE):
+            return self._skip("ic17")
         dcp = self.ds_comp_props()
         n_meas = (
             dcp.join(self.measures_defined().withColumnRenamed("subj", "prop"), "prop", "left_semi")
@@ -1025,7 +1114,11 @@ class CubeValidator:
     # IC-18 — dataset/slice/observation back-link consistency
     # ------------------------------------------------------------------
     def ic18(self) -> DataFrame:
-        """IC-18 Consistent dataset links (ValidatorIC18.java:25-39) -> (obs, ds)."""
+        """IC-18 Consistent dataset links (ValidatorIC18.java:25-39) -> (obs, ds).
+
+        Skipped without a qb:slice or without a qb:observation triple."""
+        if not (self._holds(qb.QB_SLICE_PROP) and self._holds(qb.QB_OBSERVATION_PROP)):
+            return self._skip("ic18")
         ds_slice = self.store.p(qb.QB_SLICE_PROP).select(
             F.col("subj").alias("ds"), F.col("obj").alias("slice")
         )
@@ -1038,13 +1131,17 @@ class CubeValidator:
     # ------------------------------------------------------------------
     # IC-19 — code-list membership (ConceptScheme direct, Collection via member+)
     # ------------------------------------------------------------------
-    def _dim_code_lists(self) -> DataFrame:
-        """(dim, cl): qb:codeList values of typed DimensionProperties."""
-        def rows():
+    def _dim_cl_rows(self) -> list:
+        """Sorted (dim, cl): qb:codeList values of typed DimensionProperties."""
+        def build():
             dims = self._schema().typed(qb.QB_DIMENSION_PROPERTY)
             return sorted(p for p in self._schema().pairs(qb.QB_CODE_LIST) if p[0] in dims)
 
-        return self._frame("dim_cl", rows, "dim {t} NOT NULL, cl {t} NOT NULL")
+        return self._cached("dim_cl_rows", build)
+
+    def _dim_code_lists(self) -> DataFrame:
+        """(dim, cl): the _dim_cl_rows frame."""
+        return self._frame("dim_cl", self._dim_cl_rows, "dim {t} NOT NULL, cl {t} NOT NULL")
 
     def _ds_code_dims(self, dim_cl: DataFrame) -> DataFrame:
         """(ds, dim): code-listed declared dimensions per dataset."""
@@ -1105,7 +1202,11 @@ class CubeValidator:
         strict_w3c=True runs the official SPARQL IC-19 verbatim
         (IntegrityConstraint.java:246-263): EVERY ``?obs ?dim ?v`` binding is
         checked (no single-value guard), and the output is the (obs, dim)
-        pairs with some failing binding instead of NoSPA's value-keyed rows."""
+        pairs with some failing binding instead of NoSPA's value-keyed rows.
+
+        Skipped when no typed DimensionProperty has a qb:codeList."""
+        if not self._dim_cl_rows():
+            return self._skip("ic19")
         dim_cl = self._dim_code_lists()
         schemes = self.store.typed(qb.SKOS_CONCEPT_SCHEME).select(F.col("subj").alias("cl"))
         collections = self.store.typed(qb.SKOS_COLLECTION).select(F.col("subj").alias("cl"))
@@ -1337,16 +1438,28 @@ class CubeValidator:
             .agg(F.sort_array(F.collect_set("cl")).alias("code_lists"))
         )
 
+    def _hierarchical(self) -> bool:
+        """Whether some typed DimensionProperty's code list is a typed
+        qb:HierarchicalCodeList: IC-20/21 check only those dimensions."""
+        hcl = self._schema().typed(qb.QB_HIERARCHICAL_CODE_LIST)
+        return any(cl in hcl for _dim, cl in self._dim_cl_rows())
+
     def ic20(self) -> DataFrame:
         """IC-20 Codes from hierarchy, direct pcp (ValidatorIC20_21.java:30-192)
         -> (value, code_lists). strict_w3c=True switches to the official
-        per-global-pcp union semantics (see _ic20_21_strict)."""
+        per-global-pcp union semantics (see _ic20_21_strict). Skipped
+        without a hierarchical code list on a dimension."""
+        if not self._hierarchical():
+            return self._skip("ic20")
         return self._ic20_21("direct")
 
     def ic21(self) -> DataFrame:
         """IC-21 Codes from hierarchy, inverse pcp -> (value, code_lists).
         strict_w3c=True switches to the official per-global-pcp union
-        semantics (see _ic20_21_strict)."""
+        semantics (see _ic20_21_strict). Skipped without a hierarchical
+        code list on a dimension."""
+        if not self._hierarchical():
+            return self._skip("ic21")
         return self._ic20_21("inverse")
 
     # ------------------------------------------------------------------

@@ -42,7 +42,7 @@ from .functions.linking import (
     surface_dict,
 )
 from .operators.normalize import normalize
-from .operators.validate import IC_KEY_COLUMNS, CubeValidator
+from .operators.validate import CubeValidator
 from .plans.algebra import TripleStore
 from .report import write_validation_report
 from .sources.rdf import read_rdf
@@ -403,15 +403,15 @@ def validate_store(
     ``violations/`` plus ``validation_result_<ts>.md``), the reference's
     validateAll + report (nonsparql/NospaValidator.java:83-103).
 
-    Term-valued key columns go through ``store.decode`` (the identity on a
-    string store), so an encoded store reports IRIs, not ids. The
-    validator's caches are released before this returns. Returns
-    ``(markdown text, {ic: violation count})``; ``report_dir`` must be on
-    the local filesystem."""
+    Each IC's declared scalar term columns, in the mode run, go through
+    ``store.decode`` (the identity on a string store), so an encoded store
+    reports IRIs, not ids. The validator's caches are released before this
+    returns. Returns ``(markdown text, {ic: violation count})``;
+    ``report_dir`` must be on the local filesystem."""
     os.makedirs(report_dir, exist_ok=True)
     with CubeValidator(store, strict_w3c=strict_w3c) as v:
         violations = {
-            name: store.decode(df, IC_KEY_COLUMNS[name]) for name, df in v.validate_all().items()
+            name: store.decode(df, v.term_columns(name)) for name, df in v.validate_all().items()
         }
         return write_validation_report(
             violations, parquet_dir=os.path.join(report_dir, "violations"), md_path=report_dir

@@ -17,16 +17,20 @@ store:
 
 Observation-scale predicates (qb:dataSet, qb:observation, qb:slice,
 qb:measureType, skos:inScheme/member, rdf:type qb:Observation /
-skos:Concept) are deliberately NOT in the slice.
+skos:Concept) are deliberately NOT in the slice. Whether the store holds
+them at all is in the catalog the same job observes (the distinct
+predicates and rdf:type classes): the validator skips the ICs whose
+driving vocabulary is absent.
 """
 
 from __future__ import annotations
 
 from functools import cached_property
 
+from pyspark.sql import Observation, Row
 from pyspark.sql import functions as F
 
-from .. import qb
+from .. import qb, terms
 from .algebra import TripleStore
 
 #: predicates whose every triple belongs to the schema slice
@@ -62,25 +66,55 @@ METADATA_CAP = 1_000_000
 
 
 class SchemaSlice:
-    """The collected schema-slice rows of ``store``, indexed by predicate.
+    """The collected schema-slice rows of ``store``, indexed by predicate,
+    and the store's catalog: its distinct predicates (``preds``) and
+    ``rdf:type`` classes (``classes``).
 
-    Term values are the store's own (strings, or ids for an encoded
-    store); vocabulary constants go through ``store.term_value``."""
+    The catalog is observed on the same scan as the slice (one job): the
+    metrics sit below the slice filter, so they see every triple. Term
+    values are the store's own (strings, or ids for an encoded store);
+    vocabulary constants go through ``store.term_value``."""
 
     def __init__(self, store: TripleStore):
         tv = self._tv = store.term_value
         cond = F.col("pred").isin([tv(p) for p in SLICE_PREDS]) | (
             (F.col("pred") == tv(qb.RDF_TYPE)) & F.col("obj").isin([tv(c) for c in SLICE_CLASSES])
         )
-        rows = store.df.where(cond).limit(METADATA_CAP + 1).collect()
+        catalog = Observation()
+        scan = store.df.observe(
+            catalog,
+            F.collect_set("pred").alias("preds"),
+            F.collect_set(F.when(F.col("pred") == tv(qb.RDF_TYPE), F.col("obj"))).alias("classes"),
+        )
+        rows = scan.where(cond).limit(METADATA_CAP + 1).collect()
         if len(rows) > METADATA_CAP:
             raise ValueError(
                 f"schema slice exceeds METADATA_CAP={METADATA_CAP} triples "
                 "(structure, component, slice-key, code-list and hierarchy declarations)"
             )
+        self.preds, self.classes = (set(catalog.get[k]) for k in ("preds", "classes"))
         self._by_pred: dict = {}
         for r in rows:
             self._by_pred.setdefault(r.pred, []).append(r)
+
+    def plus(self, rows) -> "SchemaSlice":
+        """The slice (and catalog) of the store with the triple tuples
+        ``rows`` added, with no further job: normalization's phase 2 reads
+        its input's slice plus the N2 rows phase 1 derived from it."""
+        out = object.__new__(SchemaSlice)
+        out._tv, out.preds, out.classes = self._tv, set(self.preds), set(self.classes)
+        out._by_pred = {p: list(rs) for p, rs in self._by_pred.items()}
+        rdf_type = self._tv(qb.RDF_TYPE)
+        slice_preds = {self._tv(p) for p in SLICE_PREDS}
+        slice_classes = {self._tv(c) for c in SLICE_CLASSES}
+        for t in rows:
+            r = Row(**dict(zip(terms.TRIPLE_COLS, t)))
+            out.preds.add(r.pred)
+            if r.pred == rdf_type:
+                out.classes.add(r.obj)
+            if r.pred in slice_preds or (r.pred == rdf_type and r.obj in slice_classes):
+                out._by_pred.setdefault(r.pred, []).append(r)
+        return out
 
     def edges(self, pred: str) -> list:
         """The slice's full triple rows of one predicate."""

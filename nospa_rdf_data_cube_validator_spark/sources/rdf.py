@@ -8,6 +8,9 @@ nonsparql/NospaValidator.java:41-48); S2 serializes the model back
 - **N-Triples** is line-oriented, so it is the *distributed* path:
   ``spark.read.text`` + an Arrow-vectorized pandas UDF regex parser. This
   is the format to use at 100 TB — it splits by line across executors.
+  The read is eager: the parsed, deduped triples are materialized
+  (localCheckpoint) once, so no later scan parses a line again and a
+  malformed line fails ``read_ntriples`` / ``read_rdf`` itself.
 - **Turtle** (the golden fixture's format) is parsed on the driver by a
   small subset parser (prefixes, ';'/',' lists, '[]' bnodes, typed/lang
   literals, numbers, booleans, 'a'); fine for schema-scale files, not for
@@ -96,11 +99,20 @@ def _parse_nt_batch(lines: pd.Series, on_malformed: str = "raise") -> pd.DataFra
 
 
 def read_ntriples(spark: SparkSession, path: str, on_malformed: str = "raise") -> DataFrame:
-    """Distributed N-Triples reader: text lines -> triples DF (dedup'd).
+    """Distributed N-Triples reader: text lines -> triples DF (dedup'd),
+    materialized before it returns.
 
-    on_malformed: 'raise' (default — Jena parity, the job fails with the
-    offending line in the error) or 'drop' (permissive mode for scrubbing
-    known-dirty dumps; rejected lines are dropped)."""
+    Every line goes through the Arrow parser once per call: the deduped
+    triples are localCheckpointed eagerly, as the reference parses the file
+    once into its in-memory model (NospaValidator.java:41-48). A lazy frame
+    would re-run the Python parse under every scan of it — normalize's N1
+    branches, its schema-slice collect and its phase-1 checkpoint each
+    pushed their ``pred`` filter below the dedup and parsed the file anew.
+
+    on_malformed: 'raise' (default — Jena parity: this call fails with the
+    offending line in the error, before any frame is returned) or 'drop'
+    (permissive mode for scrubbing known-dirty dumps; rejected lines are
+    dropped)."""
     if on_malformed not in ("raise", "drop"):
         raise ValueError(f"on_malformed must be 'raise' or 'drop', got {on_malformed!r}")
     raw = spark.read.text(path)
@@ -110,7 +122,7 @@ def read_ntriples(spark: SparkSession, path: str, on_malformed: str = "raise") -
             yield _parse_nt_batch(pdf["value"], on_malformed)
 
     parsed = raw.mapInPandas(gen, schema=terms.TRIPLES_SCHEMA)
-    return parsed.dropDuplicates(["subj", "pred", "obj"])
+    return parsed.dropDuplicates(["subj", "pred", "obj"]).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------

@@ -67,10 +67,9 @@ def test_encoded_normalization_row_parity(spark, engines):
 
 def test_encoded_all_21_ics_value_parity(engines):
     sv, ev, e_store = engines
-    from nospa_rdf_data_cube_validator_spark.operators.validate import IC_KEY_COLUMNS
-
     s_all, e_all = sv.validate_all(), ev.validate_all()
-    for name, cols in IC_KEY_COLUMNS.items():
+    for name in s_all:
+        cols = sv.term_columns(name)
         s_rows = {tuple(r[c] for c in cols) for r in s_all[name].select(*cols).collect()}
         e_dec = e_store.decode(e_all[name].select(*cols), cols)
         e_rows = {tuple(r[c] for c in cols) for r in e_dec.collect()}
@@ -105,8 +104,6 @@ def test_encoded_schema_ics_match_on_violating_cube(spark, n):
     booleans and skos:Concept; on a cube that violates icN, the encoded
     store decodes to the string store's icN rows, and they are not empty.
     One normalize per mutation: several mutations reuse eg:ds2."""
-    from nospa_rdf_data_cube_validator_spark.operators.validate import IC_KEY_COLUMNS
-
     raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + getattr(fx, f"mut_ic{n}")()))
     s_norm = normalize(raw)
     s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
@@ -114,11 +111,12 @@ def test_encoded_schema_ics_match_on_violating_cube(spark, n):
     e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
     ic = f"ic{n}"
     s_df = getattr(CubeValidator(s_norm), ic)()
-    e_df = getattr(CubeValidator(e_norm), ic)()
+    ev = CubeValidator(e_norm)
+    e_df = getattr(ev, ic)()
     # term-valued key columns decoded; scalar columns (ic2's n_dsds) as is;
     # the id-space array columns are left out
     cols = [c for c, t in s_df.dtypes if not t.startswith("array")]
-    e_dec = e_norm.decode(e_df.select(*cols), IC_KEY_COLUMNS[ic])
+    e_dec = e_norm.decode(e_df.select(*cols), ev.term_columns(ic))
     want = {tuple(r[c] for c in cols) for r in s_df.select(*cols).collect()}
     got = {tuple(r[c] for c in cols) for r in e_dec.collect()}
     assert got == want and len(want) > 0, (want, got)
@@ -182,6 +180,35 @@ def test_validate_store_decodes_encoded_report(spark, tmp_path):
     got = table.column("obs").to_pylist()
     assert counts["ic12"] == len(got) == len(want) > 0
     assert set(got) == want
+
+
+@pytest.mark.parametrize("ic", ["ic15", "ic16", "ic19"])
+def test_validate_store_decodes_strict_report(spark, tmp_path, ic):
+    """validate_store(strict_w3c=True) decodes the columns of the strict
+    plans: on the mutation cube of an IC whose strict output differs from
+    NoSPA's (IC-15/16: (obs, measure); IC-19: (obs, dim)), the encoded
+    store's committed counts and term columns equal the string store's."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from nospa_rdf_data_cube_validator_spark.pipeline import validate_store
+
+    raw = TripleStore(terms.triples_df(spark, getattr(fx, f"mut_{ic}")()))
+    reports = {}
+    for name, store in (("str", raw), ("enc", encode_store(raw, parts=4))):
+        norm = normalize(store)
+        norm = norm.with_df(norm.df.localCheckpoint(eager=True))
+        reports[name] = validate_store(norm, str(tmp_path / name), strict_w3c=True)[1]
+    assert reports["enc"] == reports["str"] and reports["str"][ic] > 0
+    cols = ["obs", "dim" if ic == "ic19" else "measure"]
+
+    def rows(name):
+        table = pq.read_table(os.path.join(tmp_path, name, "violations", ic))
+        assert all(table.schema.field(c).type == "string" for c in cols)
+        return sorted(zip(*(table.column(c).to_pylist() for c in cols)))
+
+    assert rows("enc") == rows("str")
 
 
 def test_pipeline_encoded_snapshots_and_resume(spark, tmp_path):

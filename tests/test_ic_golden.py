@@ -76,28 +76,106 @@ def test_golden_cube_ic4_flags_sex(validator):
     assert _col_set(validator.ic4(), "dim") == {fx.SEX}
 
 
+def _sliceless_rows() -> list[tuple]:
+    """golden_rows without its slices and slice key: no qb:Slice,
+    qb:slice, qb:sliceStructure, qb:observation or slice-key triple."""
+    drop = set(fx.SLICES) | {fx.SLICE_KEY}
+    return [r for r in fx.golden_rows() if r[0] not in drop and r[2] not in drop]
+
+
+@pytest.fixture(scope="module")
+def sliceless_store(spark):
+    store = normalize(TripleStore(terms.triples_df(spark, _sliceless_rows())))
+    return store.with_df(store.df.localCheckpoint(eager=True))
+
+
+#: the ICs that test_absent_features_plan_away checks on the slice-less cube
+SLICE_ICS = ("ic9", "ic10", "ic18")
+
+
 @pytest.mark.parametrize(
-    "ic", [f"ic{i}" for i in range(2, 9)] + ["ic15", "ic16", "ic19", "ic20", "ic21"]
+    "ic", [f"ic{i}" for i in range(2, 11)] + [f"ic{i}" for i in range(15, 22)]
 )
-def test_absent_features_plan_away(golden_store, ic):
-    """No IC here plans a scan of the store on the golden cube.
+def test_absent_features_plan_away(request, spark_jobs, ic):
+    """No IC here plans a scan of the store, or runs a job, once the
+    validator holds the schema slice.
 
     - IC-2..IC-8 read only schema vocabulary, so each is computed on the
       driver from the schema slice and is a local relation on any cube (on
       the golden cube every one is empty except ic4's one row).
     - The golden cube has no qb:measureType, no qb:codeList and no
-      hierarchical code list, so the metadata frames IC-15/16/19/20/21 join
-      are empty local relations and the optimizer folds each of them into
-      an empty LocalRelation: no observation-scale scan is left to run."""
-    plan = getattr(CubeValidator(golden_store), ic)()._jdf.queryExecution().optimizedPlan()
+      hierarchical code list, so IC-15/16/17/19/20/21 return the empty
+      frame of their declared schema without building a plan; so do
+      IC-9/10/18 on the slice-less variant of the cube."""
+    store = request.getfixturevalue("sliceless_store" if ic in SLICE_ICS else "golden_store")
+    v = CubeValidator(store)
+    v._schema()  # the one slice collect, which also observes the catalog
+    assert spark_jobs(lambda: getattr(v, ic)()) == 0
+    plan = getattr(v, ic)()._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation"
     assert "LogicalRDD" not in plan.toString()
 
 
+@pytest.mark.parametrize("ic", ["ic9", "ic10", "ic17", "ic18"])
+def test_skipped_ic_writes_in_one_job(sliceless_store, spark_jobs, tmp_path, ic):
+    """A skipped IC's report table is one local write: on the slice-less
+    cube IC-9/10/18 have no slice to check and IC-17 no qb:measureType
+    (their full plans wrote in 3/3/4/9 jobs)."""
+    df = getattr(CubeValidator(sliceless_store), ic)()
+    assert spark_jobs(lambda: df.write.parquet(str(tmp_path / ic))) == 1
+
+
+def _full_vocabulary_rows() -> list[tuple]:
+    """Every vocabulary an IC guard looks for: slices (golden),
+    qb:measureType, code lists and a hierarchical code list."""
+    return fx.golden_rows() + fx.measure_type_cube() + fx.codelist_cube() + fx.hierarchy_cube_direct()
+
+
+@pytest.mark.parametrize("strict", [False, True], ids=["nospa", "strict"])
+@pytest.mark.parametrize("encoded", [False, True], ids=["string", "encoded"])
+def test_built_plans_have_declared_schema(spark, monkeypatch, encoded, strict):
+    """Each IC's full plan has the schema its skip frame is declared with,
+    on a cube where no guard fires (_skip is made to fail)."""
+    from nospa_rdf_data_cube_validator_spark.plans.encoding import encode_store
+
+    raw = TripleStore(terms.triples_df(spark, _full_vocabulary_rows()))
+    store = normalize(encode_store(raw, parts=4) if encoded else raw)
+    store = store.with_df(store.df.localCheckpoint(eager=True))
+
+    def no_skip(self, ic):
+        raise AssertionError(f"{ic} skipped on the full-vocabulary cube")
+
+    monkeypatch.setattr(CubeValidator, "_skip", no_skip)
+    with CubeValidator(store, strict_w3c=strict) as v:
+        for ic, df in v.validate_all().items():
+            assert df.schema == v.output_schema(ic), ic
+
+
 def test_validate_all_job_count(golden_store, spark_jobs):
-    """Building all 21 IC plans runs only the driver-side metadata collects;
-    the empty-feature ICs cost no job of their own."""
-    assert spark_jobs(lambda: CubeValidator(golden_store).validate_all()) <= 2
+    """Building all 21 IC plans runs only the driver-side metadata collect:
+    the schema slice, whose scan also observes the catalog that the
+    absent-vocabulary guards read. No IC costs a job of its own."""
+    assert spark_jobs(lambda: CubeValidator(golden_store).validate_all()) == 1
+
+
+def test_schema_slice_catalog_sees_every_triple(golden_store):
+    """The catalog observed on the slice's scan holds the store's distinct
+    predicates and rdf:type classes, also when the capped collect scans a
+    store of many partitions in more than one job."""
+    store = golden_store.with_df(golden_store.df.repartition(9))
+    slice_ = schema.SchemaSlice(store)
+    assert slice_.preds == {r.pred for r in store.df.select("pred").distinct().collect()}
+    typed = store.df.where(store.df.pred == qb.RDF_TYPE).select("obj").distinct()
+    assert slice_.classes == {r.obj for r in typed.collect()}
+
+
+def test_normalize_job_count(spark, spark_jobs):
+    """normalize collects the schema slice of its input once (phase 2
+    reads that slice plus the N2 rows; a second collect made it 7 jobs)
+    and materializes phase 1; phase 2 and the final dedup run in the
+    caller's action."""
+    store = TripleStore(terms.triples_df(spark, fx.golden_rows()).localCheckpoint(eager=True))
+    assert spark_jobs(lambda: normalize(store)) == 6
 
 
 def test_schema_slice_over_cap_is_rejected(golden_store, monkeypatch):

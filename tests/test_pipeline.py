@@ -249,6 +249,31 @@ def test_ntriples_malformed_raises(spark, tmp_path):
     assert read_ntriples(spark, str(p), on_malformed="drop").count() == 1
 
 
+def test_ntriples_malformed_raises_at_read(spark, tmp_path):
+    """The read is eager: a malformed line fails the read_ntriples call
+    itself, before the caller runs any action on its frame."""
+    p = tmp_path / "bad.nt"
+    p.write_text("<http://x/s> <http://x/p> <http://x/o> .\nnot a triple line\n")
+    with pytest.raises(Exception, match="malformed"):
+        read_ntriples(spark, str(p))
+
+
+def test_ntriples_parsed_once(spark, tmp_path):
+    """Neither the read nor normalize over it plans the Python parse: every
+    line went through it once, inside read_ntriples."""
+    from nospa_rdf_data_cube_validator_spark import terms
+    from nospa_rdf_data_cube_validator_spark.operators.normalize import normalize
+    from nospa_rdf_data_cube_validator_spark.plans.algebra import TripleStore
+
+    from . import fixtures as fx
+
+    path = str(tmp_path / "golden_nt")
+    write_ntriples(terms.triples_df(spark, fx.golden_rows()), path)
+    read = read_ntriples(spark, path)
+    for df in (read, normalize(TripleStore(read)).df):
+        assert "MapInPandas" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_rdfxml_parses_cube_subset(spark, tmp_path):
     """RDF/XML reader (the reference's default format, Main.java:24-25):
     typed nodes, rdf:about/nodeID, rdf:resource, datatyped and lang
