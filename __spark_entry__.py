@@ -897,7 +897,7 @@ def _enc_lineitem_validator(spark, sf_dir):
     from nospa_rdf_data_cube_validator_spark.plans.algebra import TripleStore
     from nospa_rdf_data_cube_validator_spark.plans.encoding import encode_store
 
-    enc = encode_store(TripleStore(_lineitem_cube(spark, sf_dir)), parts=8)
+    enc = encode_store(TripleStore(_lineitem_cube(spark, sf_dir)))
     return CubeValidator(enc), enc
 
 

@@ -78,9 +78,10 @@ def bench_cube_validation(spark, sf: float) -> tuple[float, dict]:
     mentions = extract_mentions(tr)
     linked = link_mentions(mentions, surface_dict(spark))
     canon = canonicalize(linked, resolve_aliases(alias_edges(spark)))
-    triples = edges_to_graph(spark, canon)
-    store = TripleStore(triples)
     t0 = time.time()
+    # edges_to_graph reads its input once per branch: materialize it first
+    canon = canon.localCheckpoint(eager=True)
+    store = TripleStore(edges_to_graph(spark, canon))
     store.df = store.df.localCheckpoint(eager=True)  # materialize construction
     n_triples = store.df.count()
     normalized = normalize(store)
@@ -113,7 +114,7 @@ def bench_cube_validation(spark, sf: float) -> tuple[float, dict]:
     from nospa_rdf_data_cube_validator_spark.sources.rdf import write_bucketed
 
     t2 = time.time()
-    enc = encode_store(normalized, parts=spark.sparkContext.defaultParallelism)
+    enc = encode_store(normalized)
     enc.df = enc.df.localCheckpoint(eager=True)
     enc_only_sec = time.time() - t2
     # Encoded-vs-string shuffle-volume A/B (the plans/encoding.py claim,

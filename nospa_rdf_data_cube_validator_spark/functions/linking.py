@@ -6,13 +6,12 @@ repartitioning". Concretely:
 
 - **Linking** is a broadcast join mention.surface -> candidate entity rows;
   ambiguous surfaces (several candidates) resolve deterministically to the
-  minimum candidate IRI (a groupBy min, not a UDF). The dictionary is
-  schema-scale (it is curated), so broadcast is always right; the *mention*
-  side is the 10^12-turn side and never shuffles for the join itself.
+  minimum candidate IRI, on the driver when the dictionary is built. The
+  dictionary is schema-scale (it is curated), so broadcast is always right;
+  the *mention* side is the 10^12-turn side and never shuffles.
 - **Skew**: mention surfaces are Zipfian. The broadcast join is skew-immune
-  (no shuffle by surface). The only shuffle is the ambiguity-resolution
-  groupBy, keyed by (conv_id, turn_idx, rel, slot) — near-uniform keys. For
-  non-broadcastable dictionaries use ``salted_join`` below.
+  (no shuffle by surface). For non-broadcastable dictionaries use
+  ``salted_join`` below.
 - **Canonicalization** resolves sameAs-style alias chains with the shared
   iterative closure (plans/closure.py), then rewrites subj/obj via two more
   broadcast joins.
@@ -28,16 +27,19 @@ from . import entities as E
 
 
 def surface_dict(spark: SparkSession) -> DataFrame:
-    """(surface, entity) candidate dictionary from the curated entity list.
+    """(surface, entity): ONE row per surface of the curated entity list,
+    its entity the minimum candidate IRI (the linking ambiguity rule).
 
-    Deduplicated driver-side and shipped as a LocalRelation (session.
-    local_frame): the curated dictionary is schema-scale, so the previous
-    ``createDataFrame(...).distinct()`` paid a Python-RDD job per broadcast
-    consumption for a distinct the driver can do in a set."""
+    Resolved driver-side and shipped as a LocalRelation (session.
+    local_frame): the curated dictionary is schema-scale, so a Spark
+    distinct or groupBy over it would only add jobs."""
     from ..session import local_frame
 
-    rows = sorted({(s, iri) for (s, _ei, _si, iri) in E.surface_rows()})
-    return local_frame(spark, rows, "surface string, entity string")
+    best: dict[str, str] = {}
+    for s, _ei, _si, iri in E.surface_rows():
+        if s not in best or iri < best[s]:
+            best[s] = iri
+    return local_frame(spark, sorted(best.items()), "surface string, entity string")
 
 
 def alias_edges(spark: SparkSession) -> DataFrame:
@@ -50,26 +52,19 @@ def alias_edges(spark: SparkSession) -> DataFrame:
 def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     """(.., subj_surface, obj_surface) -> (.., subj_entity, obj_entity).
 
-    Unlinkable surfaces drop the mention (both slots must link). Ambiguity
-    resolves to min(candidate) — deterministic and SQL-expressible.
-
-    The min-candidate rule is resolved on the DICTIONARY side (a
-    surface-keyed groupBy over the curated, schema-scale dictionary)
-    before the join, so each mention joins exactly one row per slot and
-    the mention-scale stream never shuffles at all — the previous
-    join-then-groupBy form re-keyed every mention by its 5-column key
-    (8.7 MB shuffle at sf0.1 bench scale; guide §2.4: remove shuffles
-    outright). min over the join fan-out of independent subj/obj
-    candidate sets equals the per-surface min, and mention rows are
-    unique per (conv, turn, rel, surfaces) by construction (one row per
-    (turn, template) from extract_mentions), so the groupBy was a no-op
-    dedup; dropping it preserves the exact row multiset."""
-    resolved = dictionary.groupBy("surface").agg(F.min("entity").alias("entity"))
+    ``dictionary`` holds ONE (surface, entity) row per surface, its
+    ambiguity already resolved to the minimum candidate
+    (:func:`surface_dict`), so each mention joins at most one row per
+    slot. Unlinkable surfaces drop the mention (both slots must link).
+    Both joins broadcast the dictionary, so the mention-scale stream never
+    shuffles, and mention rows are unique per (conv, turn, rel, surfaces)
+    by construction (one row per (turn, template) from extract_mentions),
+    so the output needs no dedup."""
     d_subj = F.broadcast(
-        resolved.select(F.col("surface").alias("subj_surface"), F.col("entity").alias("subj_entity"))
+        dictionary.select(F.col("surface").alias("subj_surface"), F.col("entity").alias("subj_entity"))
     )
     d_obj = F.broadcast(
-        resolved.select(F.col("surface").alias("obj_surface"), F.col("entity").alias("obj_entity"))
+        dictionary.select(F.col("surface").alias("obj_surface"), F.col("entity").alias("obj_entity"))
     )
     keys = ["conv_id", "turn_idx", "rel", "subj_surface", "obj_surface"]
     return (

@@ -73,9 +73,9 @@ def edges_to_graph(spark: SparkSession, canonical: DataFrame) -> DataFrame:
        the 21 ICs then validate,
     3. the cube schema (DSD/components/dimension declarations), emitted once.
     """
-    # The union below reads `canonical` once per branch; without a persist
-    # the whole upstream extraction DAG would re-execute ~8x.
-    canonical = canonical.persist()
+    # The union below reads `canonical` once per branch: pass a committed
+    # snapshot (run_pipeline's `canonical` stage), so each branch re-reads
+    # its parquet files instead of re-running the extraction DAG.
     # full-column dedups below: the non-key columns are constants (or
     # functionally determined by the key), so grouping on every column is
     # value-identical but plans as a codegen HashAggregate instead of a
@@ -110,8 +110,8 @@ def edges_to_graph(spark: SparkSession, canonical: DataFrame) -> DataFrame:
             F.lit(None).cast("string").alias("obj_lang"),
         )
 
-    # one scan of the (persisted) observation frame fans out to all six cube
-    # rows via a single explode — no 6-branch union, no repeated cache reads.
+    # one scan of the observation frame fans out to all six cube
+    # rows via a single explode — no 6-branch union re-reading it.
     obs_triples = obs.select(
         F.explode(
             F.array(

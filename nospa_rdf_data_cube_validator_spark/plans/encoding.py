@@ -15,8 +15,8 @@ threads while its CPU-bound stages scale to ~93% of the hardware ceiling).
 
 Exactness is preserved by construction:
 
-- **Order-preserving ids**: the dictionary is built by globally RANGE-
-  sorting the distinct terms and assigning ids in that order, so
+- **Order-preserving ids**: the dictionary is built by one global sort of
+  the distinct terms and assigning ids in that order, so
   ``min(id) == id(min(term))`` — every min()-based deterministic selection
   in the validators (IC-11/12 representative picks, sort_array keys)
   produces the same term after decode as the string engine picks.
@@ -49,18 +49,21 @@ def vocabulary_terms() -> list[str]:
     return sorted(set(consts) | {terms.TRUE, terms.FALSE})
 
 
-def build_dictionary(triples: DataFrame, parts: int = 64) -> DataFrame:
+def build_dictionary(triples: DataFrame) -> DataFrame:
     """(id bigint, term string): ORDER-PRESERVING term dictionary.
 
     Global order without a single-partition window and without a JVM ->
     Python round-trip (the previous RDD zipWithIndex path pickled every
     distinct term out to Python workers and back just to number rows —
     two extra jobs and the dominant cost of encode_store at bench scale):
-    range-repartition the distinct terms, sort within partitions (range
-    partitioning makes that a global order), then assign
-    ``monotonically_increasing_id()`` entirely in the JVM. The id's high
-    bits carry the (range-ordered) partition index and its low bits the
-    in-partition position, so term order == id order. Ids are unique and
+    one global ``orderBy`` of the distinct terms, then
+    ``monotonically_increasing_id()`` entirely in the JVM. The sort
+    range-partitions into the session's ``spark.sql.shuffle.partitions``;
+    AQE then coalesces only CONTIGUOUS reducer ranges, so each output
+    partition still holds one range of the term order, and a small
+    dictionary becomes one task and one file. The id's high bits carry
+    the (range-ordered) partition index and its low bits the in-partition
+    position, so term order == id order. Ids are unique and
     order-preserving but NOT dense — nothing in the engine needs density:
     the deterministic representative picks only need
     ``min(id) == id(min(term))`` (module docstring) and ``decode()``
@@ -75,8 +78,7 @@ def build_dictionary(triples: DataFrame, parts: int = 64) -> DataFrame:
         .unionByName(triples.select(F.col("obj").alias("term")))
         .unionByName(vocab)
         .distinct()
-        .repartitionByRange(parts, "term")
-        .sortWithinPartitions("term")
+        .orderBy("term")
     )
     return all_terms.select(F.monotonically_increasing_id().alias("id"), "term")
 
@@ -140,14 +142,17 @@ class EncodedTripleStore(TripleStore):
         return df
 
 
-def encode_store(store: TripleStore, parts: int = 64) -> EncodedTripleStore:
+def encode_store(store: TripleStore) -> EncodedTripleStore:
     """Build the dictionary from a string store and return its encoded twin.
 
-    The dictionary is materialized by ``localCheckpoint``, not a cache: a
-    recomputation would number the terms anew (the ids come from a
-    sampled range partitioning) and the encoded triples would decode to
+    The dictionary's sort partitions come from the session
+    (``spark.sql.shuffle.partitions``, coalesced by AQE into contiguous
+    ranges; :func:`build_dictionary`). It is materialized by
+    ``localCheckpoint``, not a cache: a recomputation would number the
+    terms anew (the ids come from a sampled range partitioning and AQE's
+    runtime coalescing) and the encoded triples would decode to
     wrong terms silently, while a lost checkpoint block fails the job. It
     is read four times downstream (the vocabulary-constant collect plus
     the three encode joins) without re-running its plan."""
-    d = build_dictionary(store.df, parts=parts).localCheckpoint(eager=True)
+    d = build_dictionary(store.df).localCheckpoint(eager=True)
     return EncodedTripleStore(encode_triples(store.df, d), d)

@@ -33,7 +33,7 @@ def engines(spark):
     raw = TripleStore(terms.triples_df(spark, rows))
     s_norm = normalize(raw)
     s_norm.df = s_norm.df.localCheckpoint(eager=True)
-    enc = encode_store(raw, parts=4)
+    enc = encode_store(raw)
     e_norm = normalize(enc)
     e_norm.df = e_norm.df.localCheckpoint(eager=True)
     return CubeValidator(s_norm), CubeValidator(e_norm), e_norm
@@ -41,7 +41,7 @@ def engines(spark):
 
 def test_dictionary_is_order_preserving(spark):
     df = terms.triples_df(spark, fx.golden_rows())
-    d = build_dictionary(df, parts=4)
+    d = build_dictionary(df)
     rows = sorted((r["term"], r["id"]) for r in d.collect())
     ids = [i for _, i in rows]
     assert ids == sorted(ids), "ids must be ranked by term string order"
@@ -50,6 +50,25 @@ def test_dictionary_is_order_preserving(spark):
     # an implementation detail of the old RDD zipWithIndex path and is not
     # required — the r06 JVM-only assignment is sparse by design
     assert len(set(ids)) == len(ids), "ids must be unique"
+
+
+def test_dictionary_is_order_preserving_across_sort_partitions(spark):
+    """With AQE's coalescing the golden dictionary sorts into one partition;
+    without it the global sort keeps the session's range partitions, so
+    the ids' partition bits (``id >> 33``) differ and must still rank by
+    term."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        d = build_dictionary(terms.triples_df(spark, fx.golden_rows()))
+        rows = sorted((r["term"], r["id"]) for r in d.collect())
+    finally:
+        spark.conf.set(key, old)
+    ids = [i for _, i in rows]
+    assert len(set(ids)) == len(ids), "ids must be unique"
+    assert ids == sorted(ids), "ids must be ranked by term string order"
+    assert len({i >> 33 for i in ids}) >= 2, "the sort ran in one partition"
 
 
 def test_encoded_normalization_row_parity(spark, engines):
@@ -107,7 +126,7 @@ def test_encoded_schema_ics_match_on_violating_cube(spark, n):
     raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + getattr(fx, f"mut_ic{n}")()))
     s_norm = normalize(raw)
     s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
-    e_norm = normalize(encode_store(raw, parts=4))
+    e_norm = normalize(encode_store(raw))
     e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
     ic = f"ic{n}"
     s_df = getattr(CubeValidator(s_norm), ic)()
@@ -126,7 +145,7 @@ def test_dictionary_ids_survive_unpersist(spark):
     """encode_store's dictionary keeps every term's id after the frame is
     unpersisted: a recomputation would number the terms anew, and the
     triples already encoded would decode to other terms."""
-    enc = encode_store(TripleStore(terms.triples_df(spark, fx.golden_rows())), parts=4)
+    enc = encode_store(TripleStore(terms.triples_df(spark, fx.golden_rows())))
     before = {r["term"]: r["id"] for r in enc.dictionary.collect()}
     enc.dictionary.unpersist()
     after = {r["term"]: r["id"] for r in enc.dictionary.collect()}
@@ -140,7 +159,7 @@ def test_encoded_ic12_representative_choice_matches(spark):
     raw = TripleStore(terms.triples_df(spark, rows))
     s_norm = normalize(raw)
     s_norm.df = s_norm.df.localCheckpoint(eager=True)
-    e_norm = normalize(encode_store(raw, parts=4))
+    e_norm = normalize(encode_store(raw))
     e_norm.df = e_norm.df.localCheckpoint(eager=True)
     s = {r["obs"] for r in CubeValidator(s_norm).ic12().collect()}
     e_df = CubeValidator(e_norm).ic12()
@@ -167,7 +186,7 @@ def test_validate_store_decodes_encoded_report(spark, tmp_path):
     raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + fx.mut_ic12()))
     s_norm = normalize(raw)
     s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
-    e_norm = normalize(encode_store(raw, parts=4))
+    e_norm = normalize(encode_store(raw))
     e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
     want = {r["obs"] for r in CubeValidator(s_norm).ic12().collect()}
 
@@ -196,7 +215,7 @@ def test_validate_store_decodes_strict_report(spark, tmp_path, ic):
 
     raw = TripleStore(terms.triples_df(spark, getattr(fx, f"mut_{ic}")()))
     reports = {}
-    for name, store in (("str", raw), ("enc", encode_store(raw, parts=4))):
+    for name, store in (("str", raw), ("enc", encode_store(raw))):
         norm = normalize(store)
         norm = norm.with_df(norm.df.localCheckpoint(eager=True))
         reports[name] = validate_store(norm, str(tmp_path / name), strict_w3c=True)[1]

@@ -139,7 +139,7 @@ def test_built_plans_have_declared_schema(spark, monkeypatch, encoded, strict):
     from nospa_rdf_data_cube_validator_spark.plans.encoding import encode_store
 
     raw = TripleStore(terms.triples_df(spark, _full_vocabulary_rows()))
-    store = normalize(encode_store(raw, parts=4) if encoded else raw)
+    store = normalize(encode_store(raw) if encoded else raw)
     store = store.with_df(store.df.localCheckpoint(eager=True))
 
     def no_skip(self, ic):

@@ -114,6 +114,6 @@ def test_normalize_matches_model(spark, case):
 @pytest.mark.parametrize("case", CASES)
 def test_encoded_normalize_matches_model(spark, case):
     rows = _rows(case)
-    enc = encode_store(TripleStore(terms.triples_df(spark, rows)), parts=4)
+    enc = encode_store(TripleStore(terms.triples_df(spark, rows)))
     norm = normalize(enc)
     assert _collect(enc.decode(norm.df, ["subj", "pred", "obj"])) == model_normalize(rows)

@@ -1,6 +1,7 @@
 """Tests for the KG-construction pipeline: extraction invariants, linking
 ambiguity, canonicalization chains, checkpoint-resume, RDF sources."""
 
+import glob
 import os
 
 import pytest
@@ -71,6 +72,19 @@ def test_linking_ambiguity_resolves_to_min_iri(spark):
     assert linked[0]["subj_entity"] == E.entity_iri("alice")
 
 
+def test_surface_dict_is_one_local_row_per_surface(spark):
+    """surface_dict resolves each surface to its minimum candidate on the
+    driver: unique surfaces, and a plan with nothing left to aggregate."""
+    d = surface_dict(spark)
+    assert d._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    got = [(r["surface"], r["entity"]) for r in d.collect()]
+    assert len({s for s, _ in got}) == len(got)
+    candidates: dict[str, set[str]] = {}
+    for s, _ei, _si, iri in E.surface_rows():
+        candidates.setdefault(s, set()).add(iri)
+    assert dict(got) == {s: min(c) for s, c in candidates.items()}
+
+
 def test_canonicalization_chain(spark):
     amap = {r["entity"]: r["canonical"] for r in resolve_aliases(alias_edges(spark)).collect()}
     assert amap[E.entity_iri("ons_dup2")] == E.entity_iri("ons")  # 2-hop chain
@@ -106,6 +120,39 @@ def test_pipeline_end_to_end_and_resume(spark, transcripts, tmp_path):
     assert runner.manifest["stages"]["triples"]["done"]
     res2 = run_pipeline(spark, transcripts, wd, validate=False)
     assert res2["triples"].count() == res["triples"].count()
+
+
+@pytest.fixture(scope="module")
+def encoded_build(spark, transcripts, tmp_path_factory):
+    """(work dir, session cache entries before, after) of one
+    ``run_pipeline(validate=False, encoded=True)`` over the small
+    transcripts."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    wd = str(tmp_path_factory.mktemp("encoded_build") / "wd")
+    before = cache.numCachedEntries()
+    run_pipeline(spark, transcripts, wd, validate=False, encoded=True)
+    return wd, before, cache.numCachedEntries()
+
+
+def test_pipeline_leaves_no_cached_frame(encoded_build):
+    """Every stage reads committed snapshots, so a run caches nothing that
+    would outlive it in the session."""
+    _, before, after = encoded_build
+    assert after == before
+
+
+def test_term_dict_is_one_sorted_range_per_file(spark, encoded_build):
+    """The dictionary's global sort coalesces into at most the session's
+    shuffle partitions, and the committed ids are unique and rank by
+    term."""
+    wd = encoded_build[0]
+    path = os.path.join(wd, "term_dict", "v1")
+    files = glob.glob(os.path.join(path, "part-*.parquet"))
+    assert 1 <= len(files) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rows = sorted((r["term"], r["id"]) for r in spark.read.parquet(path).collect())
+    ids = [i for _, i in rows]
+    assert len(set(ids)) == len(ids)
+    assert ids == sorted(ids)
 
 
 def test_turtle_parses_reference_fixture(spark):
