@@ -12,9 +12,11 @@ repartitioning". Concretely:
 - **Skew**: mention surfaces are Zipfian. The broadcast join is skew-immune
   (no shuffle by surface). For non-broadcastable dictionaries use
   ``salted_join`` below.
-- **Canonicalization** resolves sameAs-style alias chains with the shared
-  iterative closure (plans/closure.py), then rewrites subj/obj via two more
-  broadcast joins.
+- **Canonicalization** resolves sameAs-style alias chains on the driver:
+  the alias list is curated, not data-scale, so it is collected (capped at
+  ``plans/schema.py::METADATA_CAP``) and closed in Python, not with the
+  iterative closure of plans/closure.py. The resolved map is a local
+  relation, and subj/obj are rewritten through two broadcast joins of it.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.closure import transitive_closure
+from ..plans import schema
 from . import entities as E
 
 
@@ -77,14 +79,35 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
 def resolve_aliases(edges: DataFrame) -> DataFrame:
     """(src, dst) alias edges -> (entity, canonical) fully-resolved map.
 
-    Chains (a->b->c) resolve to the terminal entity via the iterative
-    closure; for each source the canonical is the unique reached node that
-    is not itself a source (the chain terminal)."""
-    seeds = edges.select(F.col("src").alias("ent"), F.col("dst").alias("node"))
-    reach = transitive_closure(seeds, edges.select("src", "dst"))
-    sources = edges.select(F.col("src").alias("node")).distinct()
-    terminal = reach.join(sources, "node", "left_anti")
-    return terminal.select(F.col("ent").alias("entity"), F.col("node").alias("canonical"))
+    For each source the canonicals are the nodes reached from it over one
+    or more edges that are no source themselves (the chain terminals): a
+    chain a->b->c maps a and b to c, a cycle maps nowhere and a fan-out
+    maps one source to each of its terminals.
+
+    The edges are collected to the driver and closed there, so the map is
+    a local relation (``session.local_frame``) that broadcasts without a
+    job. The alias list is curated: over ``METADATA_CAP`` edges it raises
+    ``ValueError`` rather than being closed some other way."""
+    from ..session import local_frame
+
+    cap = schema.METADATA_CAP
+    rows = edges.select("src", "dst").limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(f"alias edge list exceeds METADATA_CAP={cap} edges")
+    adj: dict = {}
+    for src, dst in rows:
+        adj.setdefault(src, set()).add(dst)
+    resolved = set()
+    for src, dsts in adj.items():
+        reached, frontier = set(dsts), list(dsts)
+        while frontier:
+            for nxt in adj.get(frontier.pop(), ()):
+                if nxt not in reached:
+                    reached.add(nxt)
+                    frontier.append(nxt)
+        resolved.update((src, node) for node in reached if node not in adj)
+    out = edges.select(F.col("src").alias("entity"), F.col("dst").alias("canonical"))
+    return local_frame(edges.sparkSession, sorted(resolved), out.schema)
 
 
 def canonicalize(linked: DataFrame, alias_map: DataFrame) -> DataFrame:

@@ -31,17 +31,16 @@ def _probe_pdf(df: DataFrame, threshold: int):
     memory either way (same bound _fits enforced); guide §5/§6 — Arrow
     for driver transfers instead of the row-pickle path.
 
-    LocalRelation-backed inputs (e.g. the constant alias-edge graph in
-    the KG canonicalization path) short-circuit to a JOB-FREE
-    executeCollect — LocalTableScan collects driver-side without
-    launching tasks, so the closure costs zero cluster actions."""
+    LocalRelation-backed inputs (``session.is_local``: frames built on the
+    driver) short-circuit to a JOB-FREE executeCollect — LocalTableScan
+    collects driver-side without launching tasks, so the closure costs
+    zero cluster actions."""
     import pandas as pd
 
+    from ..session import is_local
+
     try:
-        if (
-            df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
-            == "LocalRelation"
-        ):
+        if is_local(df):
             rows = df.limit(threshold + 1).collect()
             if len(rows) > threshold:
                 return None
@@ -81,10 +80,9 @@ def transitive_closure(
     # transfer fused, Arrow-serialized): the previous shape paid an eager
     # localCheckpoint + a limit-count + a row-pickling collect() per side
     # (5-6 jobs) before the BFS even started. Seeds are probed RAW (the
-    # BFS's reached-set dedups anyway), so a LocalRelation seed frame —
-    # the constant alias graph of the KG path — stays on the job-free
-    # executeCollect branch of _probe_pdf instead of paying a
-    # dropDuplicates job.
+    # BFS's reached-set dedups anyway), so a LocalRelation seed frame
+    # stays on the job-free executeCollect branch of _probe_pdf instead of
+    # paying a dropDuplicates job.
     e_pdf = _probe_pdf(edges, driver_threshold)
     if e_pdf is not None:
         s_pdf = _probe_pdf(seeds, driver_threshold)

@@ -6,10 +6,14 @@ violations — through a log4j appender into ``validation_result_<ts>.md``
 full violation tables land in parquet for programmatic P/R scoring — at
 100 TB the parquet tables are the contract, the markdown is a preview.
 
-Each IC plan runs exactly once, as its parquet write. The per-IC row count
-comes from the footers of the files just committed, and the markdown
-sample is read back from them in this process: a violations table is small
-next to the cube, and reading a few KB of parquet costs no Spark job.
+An IC result whose optimized plan is a ``LocalRelation`` (the schema-only
+ICs and every IC skipped for absent vocabulary) is already held by the
+driver: its rows are collected without a Spark job and committed as one
+parquet file by pyarrow. Every other IC plan runs exactly once, as its
+Spark parquet write. The per-IC row count comes from the footers of the
+files just committed, and the markdown sample is read back from them in
+this process: a violations table is small next to the cube, and reading a
+few KB of parquet costs no Spark job.
 """
 
 from __future__ import annotations
@@ -19,9 +23,12 @@ import glob
 import heapq
 import itertools
 import os
+import shutil
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+
+from .session import arrow_table, is_local
 
 IC_TITLES = {
     "ic1": "Integrity Constraint 1: Unique DataSet",
@@ -78,6 +85,23 @@ def _read_committed(path: str, k: int) -> tuple[int, list[tuple]]:
     return n, top
 
 
+def _commit(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` as a parquet table and mark it
+    committed with ``_SUCCESS``. A local relation is collected on the
+    driver (a ``LocalTableScan`` runs no job) and written as one file by
+    pyarrow; any other plan runs as one Spark write."""
+    if not is_local(df):
+        df.write.mode("overwrite").parquet(path)
+        return
+    table = arrow_table(df.collect(), df.schema)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    # store_schema=False: no serialized Arrow schema in the footer; the
+    # parquet schema alone reads back to the same Spark types
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"), store_schema=False)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
 def write_validation_report(
     violations: dict[str, DataFrame],
     parquet_dir: str,
@@ -98,7 +122,7 @@ def write_validation_report(
     counts: dict[str, int] = {}
     for name, df in violations.items():
         out = os.path.join(parquet_dir, name)
-        df.write.mode("overwrite").parquet(out)
+        _commit(df, out)
         n, sample = _read_committed(out, sample_rows)
         counts[name] = n
         title = IC_TITLES.get(name, name)

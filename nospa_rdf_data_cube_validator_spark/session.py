@@ -62,13 +62,26 @@ def local_frame(spark: SparkSession, rows, schema):
     ``Row``s in schema order."""
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows, schema) -> pa.Table:
+    """Driver-side rows (tuples or ``Row``s in ``schema`` order) -> one
+    ``pyarrow.Table`` typed by the Spark ``StructType`` ``schema``. A value
+    Arrow cannot represent in its column's type raises."""
     arrow_schema = to_arrow_schema(schema)
     rows = [tuple(r) for r in rows]
-    table = pa.table(
+    return pa.table(
         [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def is_local(df) -> bool:
+    """Whether ``df``'s optimized plan is a ``LocalRelation``: its rows are
+    held by the driver, so ``df.collect()`` runs as a ``LocalTableScan``
+    and launches no Spark job."""
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
 
 
 def spread(df):

@@ -15,6 +15,10 @@ across parallelism levels for the scaling evidence):
 
 Both embed entity mentions from functions/entities.py templates, so the
 expected knowledge-graph triples are exactly computable.
+
+``read_transcripts`` reads a stored table and chooses its format from the
+path's layout, with no trial read: a ``metadata/`` directory marks an
+Iceberg path table, anything else is parquet.
 """
 
 from __future__ import annotations
@@ -136,11 +140,18 @@ def transcripts_from_orders(spark: SparkSession, sf_dir: str, n_convs: int = 997
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    """Production entry: Iceberg when the catalog provides it, parquet
-    otherwise (this sandbox has no Iceberg runtime jars; the layout and
-    semantics are identical for our purposes — snapshot dirs stand in for
-    Iceberg snapshots)."""
-    try:
+    """Production entry: the transcript table at ``path``, in the format its
+    layout names.
+
+    A path that holds a ``metadata/`` directory is an Iceberg path table
+    and is read with the Iceberg source; any failure of that read (a
+    session without the Iceberg runtime, a deleted snapshot) propagates
+    rather than falling back to the table's raw data files. Every other
+    path is read as parquet. The check is the path's Hadoop
+    ``FileSystem.exists``, so it holds on any filesystem Spark reads."""
+    jvm = spark.sparkContext._jvm
+    table = jvm.org.apache.hadoop.fs.Path(path)
+    fs = table.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(table, "metadata")):
         return spark.read.format("iceberg").load(path)
-    except Exception:
-        return spark.read.parquet(path)
+    return spark.read.parquet(path)

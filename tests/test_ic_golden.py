@@ -125,6 +125,46 @@ def test_skipped_ic_writes_in_one_job(sliceless_store, spark_jobs, tmp_path, ic)
     assert spark_jobs(lambda: df.write.parquet(str(tmp_path / ic))) == 1
 
 
+#: the ICs that are local relations on the slice-less cube: the schema-only
+#: IC-2..IC-8 and the ICs skipped for absent vocabulary
+SLICELESS_LOCAL_ICS = {f"ic{i}" for i in range(2, 11)} | {f"ic{i}" for i in range(15, 22)}
+
+
+def test_report_commits_local_ics_without_jobs(spark, sliceless_store, spark_jobs, tmp_path, monkeypatch):
+    """A local-relation IC result is committed from the driver: it adds no
+    Spark job to the report, reads back through Spark with the IC's
+    declared columns and its own rows, and the report (counts, markdown
+    after the timestamp line, read-back schemas) equals one whose tables
+    all go through df.write."""
+    from nospa_rdf_data_cube_validator_spark import report
+    from nospa_rdf_data_cube_validator_spark.session import is_local
+
+    def columns(struct):
+        return [(f.name, f.dataType.simpleString()) for f in struct]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    with CubeValidator(sliceless_store) as v:
+        results = v.validate_all()
+        local = {ic: df for ic, df in results.items() if is_local(df)}
+        assert set(local) == SLICELESS_LOCAL_ICS
+        assert spark_jobs(lambda: report.write_validation_report(local, str(tmp_path / "local"))) == 0
+        for ic, df in local.items():
+            back = spark.read.parquet(str(tmp_path / "local" / ic))
+            assert columns(back.schema) == columns(v.output_schema(ic))
+            assert rows(back) == rows(df)
+
+        text, counts = report.write_validation_report(results, str(tmp_path / "driver"))
+        monkeypatch.setattr(report, "is_local", lambda df: False)
+        spark_text, spark_counts = report.write_validation_report(results, str(tmp_path / "spark"))
+    assert counts == spark_counts and counts["ic4"] == 1
+    assert text.split("\n", 1)[1] == spark_text.split("\n", 1)[1]
+    for ic in results:
+        driver_back = spark.read.parquet(str(tmp_path / "driver" / ic))
+        assert driver_back.schema == spark.read.parquet(str(tmp_path / "spark" / ic)).schema
+
+
 def _full_vocabulary_rows() -> list[tuple]:
     """Every vocabulary an IC guard looks for: slices (golden),
     qb:measureType, code lists and a hierarchical code list."""

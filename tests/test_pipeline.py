@@ -18,12 +18,14 @@ from nospa_rdf_data_cube_validator_spark.functions.linking import (
     surface_dict,
 )
 from nospa_rdf_data_cube_validator_spark.pipeline import StageRunner, run_pipeline, validate_store
+from nospa_rdf_data_cube_validator_spark.plans import schema
+from nospa_rdf_data_cube_validator_spark.session import is_local, local_frame
 from nospa_rdf_data_cube_validator_spark.sources.rdf import (
     read_ntriples,
     read_turtle,
     write_ntriples,
 )
-from nospa_rdf_data_cube_validator_spark.sources.transcripts import synth_transcripts
+from nospa_rdf_data_cube_validator_spark.sources.transcripts import read_transcripts, synth_transcripts
 
 
 @pytest.fixture(scope="module")
@@ -90,6 +92,80 @@ def test_canonicalization_chain(spark):
     assert amap[E.entity_iri("ons_dup2")] == E.entity_iri("ons")  # 2-hop chain
     assert amap[E.entity_iri("cardiff_dup")] == E.entity_iri("cardiff")
     assert amap == E.canonical_map()
+
+
+@pytest.mark.parametrize(
+    "edges, want",
+    [
+        ([("a", "b"), ("b", "a")], set()),
+        ([("a", "b"), ("a", "c")], {("a", "b"), ("a", "c")}),
+        ([("a", "b"), ("b", "c"), ("c", "b")], set()),
+        ([("a", "b"), ("b", "c"), ("a", "d")], {("a", "c"), ("a", "d"), ("b", "c")}),
+    ],
+    ids=["cycle", "fan_out", "chain_into_cycle", "chain_and_fan_out"],
+)
+def test_resolve_aliases_maps_sources_to_chain_terminals(spark, edges, want):
+    """Only reached nodes that are no source become canonicals: a cycle
+    maps nowhere and a fan-out maps one source to each terminal."""
+    resolved = resolve_aliases(local_frame(spark, edges, "src string, dst string"))
+    assert {(r["entity"], r["canonical"]) for r in resolved.collect()} == want
+
+
+def test_resolve_aliases_rejects_edges_over_cap(spark, monkeypatch):
+    """The alias list is closed on the driver; one longer than
+    METADATA_CAP edges is rejected instead of closed some other way."""
+    monkeypatch.setattr(schema, "METADATA_CAP", len(E.ALIAS_EDGES) - 1)
+    with pytest.raises(ValueError, match="METADATA_CAP"):
+        resolve_aliases(alias_edges(spark))
+
+
+def test_canonical_stage_jobs(spark, spark_jobs, transcripts, tmp_path, monkeypatch):
+    """The alias map is a local relation, so the canonical stage's two
+    broadcasts of it run no job: the stage commits in at most 2 jobs (a
+    Spark-side closure of the map made it 4)."""
+    assert is_local(resolve_aliases(alias_edges(spark)))
+    jobs: dict[str, int] = {}
+    run = StageRunner.run
+
+    def counted(self, stage, build, rerun=False):
+        out = []
+        jobs[stage] = spark_jobs(lambda: out.append(run(self, stage, build, rerun)))
+        return out[0]
+
+    monkeypatch.setattr(StageRunner, "run", counted)
+    run_pipeline(spark, transcripts, str(tmp_path / "wd"), validate=False, encoded=False)
+    assert jobs["canonical"] <= 2
+
+
+def test_read_transcripts_parquet_without_iceberg_probe(spark, transcripts, tmp_path, monkeypatch):
+    """A parquet table is read as parquet, with no trial Iceberg read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    path = str(tmp_path / "transcripts")
+    transcripts.write.parquet(path)
+    formats = []
+    fmt = DataFrameReader.format
+
+    def recorded(self, source):
+        formats.append(source)
+        return fmt(self, source)
+
+    monkeypatch.setattr(DataFrameReader, "format", recorded)
+    got = read_transcripts(spark, path)
+    assert formats == []
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, transcripts.collect()))
+
+
+def test_read_transcripts_iceberg_layout_fails_loudly(spark, transcripts, tmp_path):
+    """A path with a metadata/ directory is an Iceberg table: it is read by
+    the Iceberg source and its failure propagates (a session without the
+    Iceberg runtime cannot read it), never falling back to the data files
+    as parquet."""
+    path = tmp_path / "transcripts"
+    transcripts.write.parquet(str(path))
+    (path / "metadata").mkdir()
+    with pytest.raises(Exception, match="(?i)iceberg"):
+        read_transcripts(spark, str(path)).collect()
 
 
 def test_canonicalize_rewrites(spark):
