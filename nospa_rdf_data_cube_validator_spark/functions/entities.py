@@ -72,10 +72,6 @@ def entity_iri(local_id: str) -> str:
     return ENTITY_NS + local_id
 
 
-def pred_iri(local_id: str) -> str:
-    return PRED_NS + local_id
-
-
 def surface_rows() -> list[tuple[str, int, int, str]]:
     """(surface, ent_idx, surf_idx, entity_iri) lookup rows."""
     rows = []

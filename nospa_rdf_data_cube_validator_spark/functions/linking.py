@@ -10,8 +10,7 @@ repartitioning". Concretely:
   dictionary is schema-scale (it is curated), so broadcast is always right;
   the *mention* side is the 10^12-turn side and never shuffles.
 - **Skew**: mention surfaces are Zipfian. The broadcast join is skew-immune
-  (no shuffle by surface). For non-broadcastable dictionaries use
-  ``salted_join`` below.
+  (no shuffle by surface).
 - **Canonicalization** resolves sameAs-style alias chains on the driver:
   the alias list is curated, not data-scale, so it is collected (capped at
   ``plans/schema.py::METADATA_CAP``) and closed in Python, not with the
@@ -126,20 +125,3 @@ def canonicalize(linked: DataFrame, alias_map: DataFrame) -> DataFrame:
         .drop("subj_canon", "obj_canon")
     )
 
-
-def salted_join(
-    big: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-buster for non-broadcastable dimension joins: explode the dim
-    side n_salts ways, salt the big side by a uniform hash, join on
-    (key, salt). Use when a handful of hot keys would dominate a sort-merge
-    partition and AQE skew-split isn't enough."""
-    salted_dim = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    salted_big = big.withColumn(
-        "_salt", (F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))).cast("int")
-    )
-    return salted_big.join(salted_dim, [key, "_salt"], how).drop("_salt")

@@ -60,14 +60,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-def _shingles(text_col: str, k: int) -> F.Column:
-    """Distinct character k-shingles as an array column (JVM-side)."""
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-        f" i -> substr({text_col}, i, {k})))"
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",

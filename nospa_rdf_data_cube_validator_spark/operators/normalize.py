@@ -14,8 +14,9 @@ from it entirely in Python, and the N3-N5 (ds, component) sides become
 local relations, so a cube without dataset- or slice-attached components
 folds those push-downs away at plan time. Only the observation-scale
 rules run as Spark plans: N1's type closure and the N3-N5 joins against
-the qb:dataSet, qb:slice and qb:observation edges. Phase 1's output is
-materialized (localCheckpoint) before phase 2 reads it.
+the qb:dataSet, qb:slice and qb:observation edges. normalize() returns a
+materialized store (one localCheckpoint of the deduplicated result), so
+no caller materializes it again.
 """
 
 from __future__ import annotations
@@ -193,6 +194,11 @@ def _phase2(store: TripleStore, schema: SchemaSlice) -> TripleStore:
     # terms, never null: the derived pred column keeps the store's nullability
     cols = "ds {t} NOT NULL, comp {t} NOT NULL".format(t=store.term_sql_type)
     ds_pairs, slice_pairs = _push_down_comps(store, schema)
+    # the value joins read only the pushed-down components' triples; the
+    # filter lets Catalyst prune phase 1's N1 rows (all rdf:type) from
+    # those scans unless rdf:type is itself a pushed-down component
+    comps = sorted({comp for _, comp in ds_pairs | slice_pairs})
+    comp_values = df.where(F.col("pred").isin(comps))
     ds_comp = local_frame(df.sparkSession, ds_pairs, cols)
     slice_ds_comp = local_frame(df.sparkSession, slice_pairs, cols)
 
@@ -208,10 +214,12 @@ def _phase2(store: TripleStore, schema: SchemaSlice) -> TripleStore:
     ).select(F.col("subj").alias("slice"), F.col("obj").alias("obs"))
 
     # N3: the dataset's values of its dataset-attached components
-    n3 = _emit(obs_ds.join(F.broadcast(_values(df, ds_comp, "ds")), "ds"), "obs")
+    n3 = _emit(obs_ds.join(F.broadcast(_values(comp_values, ds_comp, "ds")), "ds"), "obs")
     # N4 + N5: the slice's values of its slice-attached components and dims
     slice_comp = slice_ds_comp.join(ds_slice, "ds").select("slice", "comp").distinct()
-    n45 = _emit(slice_obs.join(F.broadcast(_values(df, slice_comp, "slice")), "slice"), "obs")
+    n45 = _emit(
+        slice_obs.join(F.broadcast(_values(comp_values, slice_comp, "slice")), "slice"), "obs"
+    )
     return store.with_df(df.unionByName(n3).unionByName(n45))
 
 
@@ -232,14 +240,15 @@ def normalize(store: TripleStore) -> TripleStore:
     datasets and slices), so there the input's slice plus N2 reads as
     phase 1's output's would.
 
-    Phase 1's multiset result is materialized (localCheckpoint — a narrow
-    write, no shuffle) before phase 2 scans it for the push-down joins; an
-    unmaterialized union would re-execute the phase-1 derivation per scan."""
+    The returned store is materialized: the deduplicated result is
+    localCheckpointed before normalize returns, so every later scan (each
+    IC, each count) reads the normalized rows instead of re-running the
+    normalization. Phase 1 is not materialized on its own: phase 2's value
+    joins filter on the pushed-down components, so their scans of phase 1's
+    output carry no N1 branch, and the one final job derives N1 once."""
     schema = SchemaSlice(store)
     n2 = _n2_rows(store, schema)
-    p1 = _phase1(store, n2)
-    p1 = p1.with_df(p1.df.localCheckpoint(eager=True))
-    multiset = _phase2(p1, schema.plus(n2))
+    multiset = _phase2(_phase1(store, n2), schema.plus(n2))
     # FULL-column dedup on purpose: a subset-key dropDuplicates plans as
     # an Aggregate with First(obj_kind)/First(obj_datatype)/First(obj_lang)
     # — string buffers that force SortAggregate (two sorts of every row by
@@ -251,4 +260,4 @@ def normalize(store: TripleStore) -> TripleStore:
     # identical — and Jena's set semantics key on full node identity
     # anyway (a literal and an IRI with equal lexical form are distinct
     # triples in the reference model).
-    return multiset.with_df(multiset.df.dropDuplicates())
+    return multiset.with_df(multiset.df.dropDuplicates().localCheckpoint(eager=True))

@@ -50,11 +50,6 @@ from ..session import local_frame
 _EMPTY_STR_ARRAY = "array()"
 
 
-def _sql_term(v) -> str:
-    """Render a term VALUE (string URI or int64 id) as a SQL literal."""
-    return "'" + str(v).replace("'", "''") + "'" if isinstance(v, str) else str(v)
-
-
 #: every IC's violation columns, declared once; STRICT_COLUMNS holds the
 #: ICs whose strict_w3c plan returns other columns (IC-15/16/19) or other
 #: nullability (IC-20/21). ``{t}`` is a store term — a string, or an int64
@@ -266,9 +261,6 @@ class CubeValidator:
 
     def measures_defined(self) -> DataFrame:
         return self._typed(qb.QB_MEASURE_PROPERTY)
-
-    def attrs_defined(self) -> DataFrame:
-        return self._typed(qb.QB_ATTRIBUTE_PROPERTY)
 
     def _obs_pred_stats(self, preds: DataFrame) -> DataFrame:
         """(obs, pred, n_vals, min_val) over triples whose pred is in ``preds``.

@@ -422,12 +422,10 @@ def validate_file(
     spark: SparkSession, path: str, report_dir: str, strict_w3c: bool = False
 ) -> tuple[TripleStore, str, dict[str, int]]:
     """Read an RDF cube (any form ``read_rdf`` takes), normalize it and
-    validate it with :func:`validate_store` (Main.java:21-58). Returns
+    validate it with :func:`validate_store` (Main.java:21-58). ``normalize``
+    returns a materialized store, which every IC scans as it is. Returns
     ``(normalized store, markdown text, {ic: violation count})``."""
     store = normalize(TripleStore(read_rdf(spark, path)))
-    # every IC scans the normalized store: materialize it once, or each
-    # one re-runs the parse and both normalization phases
-    store = store.with_df(store.df.localCheckpoint(eager=True))
     text, counts = validate_store(store, report_dir, strict_w3c=strict_w3c)
     return store, text, counts
 
@@ -498,8 +496,9 @@ def run_pipeline(
             base_store: TripleStore = EncodedTripleStore(enc, term_dict)
         else:
             base_store = TripleStore(triples)
-        store = normalize(base_store)
-        result["store"] = store.with_df(
-            runner.run_table("cube_atrest", lambda: store.df, buckets=buckets)
+        # normalize returns a materialized store: called inside the build,
+        # a resumed run that finds the table pays nothing for it
+        result["store"] = base_store.with_df(
+            runner.run_table("cube_atrest", lambda: normalize(base_store).df, buckets=buckets)
         )
     return result

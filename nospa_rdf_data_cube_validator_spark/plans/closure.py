@@ -73,7 +73,9 @@ def transitive_closure(
     set fit under ``driver_threshold`` rows (a driver-MEMORY bound: ~tens
     of MB collected), a driver-side BFS replaces the distributed fixpoint —
     identical output without the per-iteration job/localCheckpoint
-    overhead. Larger inputs take the distributed loop below.
+    overhead. Larger inputs take the distributed loop below, which RAISES
+    if ``max_iter`` hops end with a non-empty frontier rather than return
+    a truncated reachable set.
     """
     tag_cols = [c for c in seeds.columns if c != "node"]
     # Driver fast path decided with ONE action per side (probe and
@@ -95,6 +97,7 @@ def transitive_closure(
     seeds_d = seeds_d.localCheckpoint(eager=True)
     reached = seeds_d
     frontier = reached
+    converged = False
     for it in range(max_iter):
         cond = [frontier["node"] == edges["src"]]
         for t in edge_tags:
@@ -107,10 +110,16 @@ def transitive_closure(
         frontier = stepped.join(reached, tag_cols + ["node"], "left_anti")
         frontier = frontier.localCheckpoint(eager=True)
         if frontier.isEmpty():
+            converged = True
             break
         reached = reached.unionByName(frontier)
         if (it + 1) % CHECKPOINT_EVERY == 0:
             reached = reached.localCheckpoint(eager=True)
+    if not converged:
+        raise RuntimeError(
+            f"transitive_closure did not reach a fixpoint in {max_iter} hops "
+            f"— refusing to return a truncated reachable set"
+        )
     return reached
 
 
@@ -156,16 +165,6 @@ def _closure_on_driver(
     from ..session import local_frame
 
     return local_frame(seeds.sparkSession, out, seeds.schema)
-
-
-def reachable_pairs(
-    roots: DataFrame,
-    edges: DataFrame,
-    edge_tags: tuple[str, ...] = (),
-    max_iter: int = 64,
-) -> DataFrame:
-    """Alias with the argument names the validators use (roots == seeds)."""
-    return transitive_closure(roots, edges, edge_tags=edge_tags, max_iter=max_iter)
 
 
 def connected_components(

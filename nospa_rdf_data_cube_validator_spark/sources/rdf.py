@@ -11,6 +11,8 @@ nonsparql/NospaValidator.java:41-48); S2 serializes the model back
   The read is eager: the parsed, deduped triples are materialized
   (localCheckpoint) once, so no later scan parses a line again and a
   malformed line fails ``read_ntriples`` / ``read_rdf`` itself.
+- **RDF/XML directories** (``read_rdfxml_dir``) are parsed one document
+  per task and read eagerly the same way.
 - **Turtle** (the golden fixture's format) is parsed on the driver by a
   small subset parser (prefixes, ';'/',' lists, '[]' bnodes, typed/lang
   literals, numbers, booleans, 'a'); fine for schema-scale files, not for
@@ -773,9 +775,11 @@ def read_rdfxml_dir(spark: SparkSession, path: str, glob: str = "part-*") -> Dat
     one-document-per-file corpora with other naming) into a triples
     DataFrame — DISTRIBUTED: each executor task parses whole files
     (wholetext rows), so a million-document metadata harvest scales with
-    the cluster instead of the driver. A malformed document fails the job
-    loudly with the parser's error (Jena parity), same as the single-file
-    reader; a directory with no matching files yields an empty frame.
+    the cluster instead of the driver. The read is eager, like
+    read_ntriples: the deduped triples are localCheckpointed before this
+    returns, so every document is parsed once and a malformed one fails
+    this call with the parser's error (Jena parity); a directory with no
+    matching files yields an empty local frame, with no job.
 
     Per-file bnode tag: a fresh parser restarts its anonymous-bnode
     counter, so untagged labels (_:x1, _:x2 ...) would wrongly merge
@@ -802,7 +806,7 @@ def read_rdfxml_dir(spark: SparkSession, path: str, glob: str = "part-*") -> Dat
                     yield pd.DataFrame(rows, columns=terms.TRIPLE_COLS)
 
     parsed = raw.mapInPandas(gen, schema=terms.TRIPLES_SCHEMA)
-    return parsed.dropDuplicates(["subj", "pred", "obj"])
+    return parsed.dropDuplicates(["subj", "pred", "obj"]).localCheckpoint(eager=True)
 
 
 def write_ntriples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:

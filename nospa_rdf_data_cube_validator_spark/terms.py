@@ -95,10 +95,6 @@ def is_bnode(col: str = "obj_kind") -> F.Column:
     return F.col(col) == KIND_BNODE
 
 
-def is_literal(col: str = "obj_kind") -> F.Column:
-    return F.col(col) == KIND_LITERAL
-
-
 def ntriples_term_obj() -> F.Column:
     """Render the object columns of a triples DF back to N-Triples syntax.
 

@@ -32,10 +32,8 @@ def engines(spark):
     )
     raw = TripleStore(terms.triples_df(spark, rows))
     s_norm = normalize(raw)
-    s_norm.df = s_norm.df.localCheckpoint(eager=True)
     enc = encode_store(raw)
     e_norm = normalize(enc)
-    e_norm.df = e_norm.df.localCheckpoint(eager=True)
     return CubeValidator(s_norm), CubeValidator(e_norm), e_norm
 
 
@@ -125,9 +123,7 @@ def test_encoded_schema_ics_match_on_violating_cube(spark, n):
     One normalize per mutation: several mutations reuse eg:ds2."""
     raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + getattr(fx, f"mut_ic{n}")()))
     s_norm = normalize(raw)
-    s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
     e_norm = normalize(encode_store(raw))
-    e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
     ic = f"ic{n}"
     s_df = getattr(CubeValidator(s_norm), ic)()
     ev = CubeValidator(e_norm)
@@ -158,9 +154,7 @@ def test_encoded_ic12_representative_choice_matches(spark):
     rows = fx.golden_rows() + fx.mut_ic12()
     raw = TripleStore(terms.triples_df(spark, rows))
     s_norm = normalize(raw)
-    s_norm.df = s_norm.df.localCheckpoint(eager=True)
     e_norm = normalize(encode_store(raw))
-    e_norm.df = e_norm.df.localCheckpoint(eager=True)
     s = {r["obs"] for r in CubeValidator(s_norm).ic12().collect()}
     e_df = CubeValidator(e_norm).ic12()
     e = {r["obs"] for r in e_norm.decode(e_df, ["obs"]).collect()}
@@ -185,9 +179,7 @@ def test_validate_store_decodes_encoded_report(spark, tmp_path):
 
     raw = TripleStore(terms.triples_df(spark, fx.golden_rows() + fx.mut_ic12()))
     s_norm = normalize(raw)
-    s_norm = s_norm.with_df(s_norm.df.localCheckpoint(eager=True))
     e_norm = normalize(encode_store(raw))
-    e_norm = e_norm.with_df(e_norm.df.localCheckpoint(eager=True))
     want = {r["obs"] for r in CubeValidator(s_norm).ic12().collect()}
 
     before = _cached_plans(spark)
@@ -217,7 +209,6 @@ def test_validate_store_decodes_strict_report(spark, tmp_path, ic):
     reports = {}
     for name, store in (("str", raw), ("enc", encode_store(raw))):
         norm = normalize(store)
-        norm = norm.with_df(norm.df.localCheckpoint(eager=True))
         reports[name] = validate_store(norm, str(tmp_path / name), strict_w3c=True)[1]
     assert reports["enc"] == reports["str"] and reports["str"][ic] > 0
     cols = ["obs", "dim" if ic == "ic19" else "measure"]

@@ -21,7 +21,6 @@ from . import fixtures as fx
 def golden_store(spark):
     store = TripleStore(terms.triples_df(spark, fx.golden_rows()))
     normalized = normalize(store)
-    normalized.df = normalized.df.localCheckpoint(eager=True)
     yield normalized
 
 
@@ -85,8 +84,7 @@ def _sliceless_rows() -> list[tuple]:
 
 @pytest.fixture(scope="module")
 def sliceless_store(spark):
-    store = normalize(TripleStore(terms.triples_df(spark, _sliceless_rows())))
-    return store.with_df(store.df.localCheckpoint(eager=True))
+    return normalize(TripleStore(terms.triples_df(spark, _sliceless_rows())))
 
 
 #: the ICs that test_absent_features_plan_away checks on the slice-less cube
@@ -180,7 +178,6 @@ def test_built_plans_have_declared_schema(spark, monkeypatch, encoded, strict):
 
     raw = TripleStore(terms.triples_df(spark, _full_vocabulary_rows()))
     store = normalize(encode_store(raw) if encoded else raw)
-    store = store.with_df(store.df.localCheckpoint(eager=True))
 
     def no_skip(self, ic):
         raise AssertionError(f"{ic} skipped on the full-vocabulary cube")
@@ -211,11 +208,17 @@ def test_schema_slice_catalog_sees_every_triple(golden_store):
 
 def test_normalize_job_count(spark, spark_jobs):
     """normalize collects the schema slice of its input once (phase 2
-    reads that slice plus the N2 rows; a second collect made it 7 jobs)
-    and materializes phase 1; phase 2 and the final dedup run in the
-    caller's action."""
+    reads that slice plus the N2 rows; a second collect made it one job
+    more) and materializes only its deduplicated result: 13 jobs, where a
+    phase-1 checkpoint plus a caller's checkpoint of the result took 6 + 8.
+    The result is a LogicalRDD, which a count reads without re-running any
+    normalization: it costs what a count of the materialized input costs."""
     store = TripleStore(terms.triples_df(spark, fx.golden_rows()).localCheckpoint(eager=True))
-    assert spark_jobs(lambda: normalize(store)) == 6
+    out = []
+    assert spark_jobs(lambda: out.append(normalize(store))) == 13
+    plan = out[0].df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert spark_jobs(out[0].df.count) == spark_jobs(store.df.count)
 
 
 def test_schema_slice_over_cap_is_rejected(golden_store, monkeypatch):

@@ -16,9 +16,6 @@ EG = fx.EG
 def _validator(spark, extra_rows):
     store = TripleStore(terms.triples_df(spark, fx.golden_rows() + extra_rows))
     normalized = normalize(store)
-    # Truncate lineage: every IC otherwise re-analyzes + re-executes the
-    # whole normalization DAG per action, which dominates test wall time.
-    normalized.df = normalized.df.localCheckpoint(eager=True)
     return CubeValidator(normalized)
 
 
@@ -189,7 +186,6 @@ def _strict_validator(spark, extra_rows):
 
     store = TripleStore(terms.triples_df(spark, fx.golden_rows() + extra_rows))
     normalized = normalize(store)
-    normalized.df = normalized.df.localCheckpoint(eager=True)
     return _CV(normalized, strict_w3c=True)
 
 
@@ -218,7 +214,6 @@ def test_ic17_one_sided_skip_strict(spark):
     (equal-count 0, n_unequal 3); the complete pair o78/o79 still passes."""
     store = TripleStore(terms.triples_df(spark, fx.golden_rows() + fx.mut_ic17_one_sided()))
     normalized = normalize(store)
-    normalized.df = normalized.df.localCheckpoint(eager=True)
     v = CubeValidator(normalized, strict_w3c=True)
     got = {(r["obs"], r["n_unequal"]) for r in v.ic17().collect()}
     assert got == {(EG + "o93", 3)}
@@ -290,7 +285,6 @@ def test_ic6_strict_checks_unreferenced_specs(spark):
     ]
     store = TripleStore(terms.triples_df(spark, fx.golden_rows() + rows))
     normalized = normalize(store)
-    normalized.df = normalized.df.localCheckpoint(eager=True)
     assert EG + "notAnAttribute" not in _col_set(CubeValidator(normalized).ic6(), "comp_prop")
     strict = CubeValidator(normalized, strict_w3c=True)
     assert EG + "notAnAttribute" in _col_set(strict.ic6(), "comp_prop")

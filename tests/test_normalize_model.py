@@ -117,3 +117,30 @@ def test_encoded_normalize_matches_model(spark, case):
     enc = encode_store(TripleStore(terms.triples_df(spark, rows)))
     norm = normalize(enc)
     assert _collect(enc.decode(norm.df, ["subj", "pred", "obj"])) == model_normalize(rows)
+
+
+def _rdf_type_pushed_down_rows() -> list:
+    """The golden cube with a dataset-attached component spec whose
+    component property is rdf:type, and without the dataset's stated
+    ``a qb:DataSet``: the dataset's only type is the one N1 derives from
+    its observations' qb:dataSet edges, and N3 pushes it onto them."""
+    stated = (fx.DATASET, qb.RDF_TYPE, qb.QB_DATASET)
+    return [r for r in fx.golden_rows() if r[:3] != stated] + [
+        terms.iri_row(fx.DSD, qb.QB_COMPONENT, "_:ctype"),
+        terms.iri_row("_:ctype", qb.QB_COMPONENT_PROPERTY, qb.RDF_TYPE),
+        terms.iri_row("_:ctype", qb.QB_COMPONENT_ATTACHMENT, qb.QB_DATASET),
+    ]
+
+
+def test_rdf_type_component_pushes_n1_rows(spark):
+    """Phase 2's value scans keep only the pushed-down components' rows,
+    which prunes phase 1's N1 rows (all rdf:type) from them; when rdf:type
+    is itself a pushed-down component, the N1-derived ``?ds a qb:DataSet``
+    still reaches every observation, on the string and the encoded store."""
+    rows = _rdf_type_pushed_down_rows()
+    want = model_normalize(rows)
+    assert _typed(fx.obs_uri(1, 1), qb.QB_DATASET) in want
+    raw = TripleStore(terms.triples_df(spark, rows))
+    assert _collect(normalize(raw).df) == want
+    enc = encode_store(raw)
+    assert _collect(enc.decode(normalize(enc).df, ["subj", "pred", "obj"])) == want

@@ -6,7 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from nospa_rdf_data_cube_validator_spark.operators import dedup, multimodal, similarity, textual
-from nospa_rdf_data_cube_validator_spark.plans.closure import connected_components
+from nospa_rdf_data_cube_validator_spark.plans.closure import (
+    connected_components,
+    transitive_closure,
+)
 
 
 @pytest.fixture(scope="module")
@@ -82,6 +85,43 @@ def test_connected_components_budget_exhaustion_raises(spark):
     with pytest.raises(RuntimeError, match="fixpoint"):
         connected_components(edges, max_iter=1, driver_threshold=0)
 
+
+
+def _tagged_graph(spark):
+    """(seeds, edges) tagged by pcp: under "p" a cycle 1 -> 2 -> 3 -> 1 with
+    a fan-out 2 -> {4, 5} and a chain 5 -> 6; under "q" a single hop from 1
+    that the "p" seeds must not follow."""
+    seeds = spark.createDataFrame([("p", 1), ("q", 7)], "pcp string, node long")
+    edges = spark.createDataFrame(
+        [("p", 1, 2), ("p", 2, 3), ("p", 3, 1), ("p", 2, 4), ("p", 2, 5), ("p", 5, 6),
+         ("q", 1, 9), ("q", 7, 8)],
+        "pcp string, src long, dst long",
+    )
+    return seeds, edges
+
+
+def test_transitive_closure_distributed_matches_driver(spark):
+    """The distributed fixpoint (driver_threshold=0) and the driver BFS
+    reach the same (pcp, node) rows on a tagged graph with a cycle and a
+    fan-out."""
+    seeds, edges = _tagged_graph(spark)
+
+    def rows(**kw):
+        out = transitive_closure(seeds, edges, edge_tags=("pcp",), **kw)
+        return sorted(tuple(r) for r in out.select("pcp", "node").collect())
+
+    want = [("p", n) for n in range(1, 7)] + [("q", 7), ("q", 8)]
+    assert rows() == want
+    assert rows(driver_threshold=0) == want
+
+
+def test_transitive_closure_budget_exhaustion_raises(spark):
+    """A 6-hop chain cannot close in 3 distributed hops: the loop fails
+    loudly instead of returning the chain without its deeper nodes."""
+    seeds = spark.createDataFrame([(0,)], "node long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        transitive_closure(seeds, edges, max_iter=3, driver_threshold=0)
 
 @pytest.fixture(scope="module")
 def embeddings(spark):

@@ -698,6 +698,36 @@ def test_rdfxml_dir_anonymous_bnodes_distinct_across_files(spark, tmp_path):
     assert df.count() == 4
 
 
+def test_rdfxml_dir_parsed_once(spark, tmp_path):
+    """read_rdfxml_dir is eager like read_ntriples: a directory with one
+    malformed document fails the call itself, and neither the read of a
+    well-formed directory nor normalize over it plans the Python parse."""
+    from nospa_rdf_data_cube_validator_spark import terms
+    from nospa_rdf_data_cube_validator_spark.operators.normalize import normalize
+    from nospa_rdf_data_cube_validator_spark.plans.algebra import TripleStore
+    from nospa_rdf_data_cube_validator_spark.sources.rdf import read_rdfxml_dir, write_rdfxml
+
+    from . import fixtures as fx
+
+    path = str(tmp_path / "golden_xml")
+    write_rdfxml(terms.triples_df(spark, fx.golden_rows()), path)
+    read = read_rdfxml_dir(spark, path)
+    for df in (read, normalize(TripleStore(read)).df):
+        assert "MapInPandas" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+    bad = tmp_path / "bad_xml"
+    bad.mkdir()
+    (bad / "part-00000").write_text(
+        '<?xml version="1.0"?><rdf:RDF'
+        ' xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"'
+        ' xmlns:eg="http://example.org/ns#"><rdf:Description'
+        ' rdf:about="http://example.org/s"><eg:p>v</eg:p></rdf:Description></rdf:RDF>'
+    )
+    (bad / "part-00001").write_text('<?xml version="1.0"?><rdf:RDF><unclosed')
+    with pytest.raises(Exception, match="ParseError|not well-formed|no element found"):
+        read_rdfxml_dir(spark, str(bad))
+
+
 def test_turtle_whitespace_before_datatype_marker(spark, tmp_path):
     """Turtle's '^^' is a separate terminal: whitespace between the string
     and the datatype marker is legal and must parse identically to the

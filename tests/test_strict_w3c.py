@@ -28,7 +28,6 @@ EG = fx.EG
 def _both_modes(spark, extra_rows):
     store = TripleStore(terms.triples_df(spark, fx.golden_rows() + extra_rows))
     normalized = normalize(store)
-    normalized.df = normalized.df.localCheckpoint(eager=True)
     return CubeValidator(normalized), CubeValidator(normalized, strict_w3c=True)
 
 
